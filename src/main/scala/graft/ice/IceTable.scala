@@ -983,21 +983,11 @@ final class IceTable(
 
   private def insertDefault(routed: DataFrame): (Seq[FileMarker], Schema) = {
     val schema = Schema.fromStructType(routed.drop(IceTable.RouteCol).schema)
-    val tmp = s"$root/_tmp/${UUID.randomUUID()}"
     val sortCols = col(IceTable.RouteCol) +: cfg.sortOrder.map(col)
     val arranged =
       if (cfg.shuffleOnInsert) routed.repartition(col(IceTable.RouteCol))
       else routed
-    val writer = arranged
-      .sortWithinPartitions(sortCols: _*)
-      .write
-      .partitionBy(IceTable.RouteCol)
-      .option("compression", cfg.compressionCodec)
-      .option("parquet.block.size", cfg.parquetBlockBytes)
-    val withRows = cfg.rowGroupRows
-      .fold(writer)(n => writer.option("parquet.block.row.count.limit", n))
-    withBloomOptions(withRows).parquet(tmp)
-    (collectTempParts(tmp), schema)
+    (writeDataFiles(arranged.sortWithinPartitions(sortCols: _*), None), schema)
   }
 
   /** Latest persisted ANALYZE stats through the PROCESS-WIDE cache
@@ -1081,7 +1071,7 @@ final class IceTable(
           try {
             val result = ss.sql(sql.replaceAll("\\b_rows\\b", view))
             val s = Schema.fromStructType(result.schema)
-            (s, writeSingleFile(result, dataFileRel(p)))
+            (s, writeSingleFile(result, p))
           } finally ss.catalog.dropTempView(view)
         }
       }, Duration.Inf)
@@ -1092,62 +1082,102 @@ final class IceTable(
     (results.map(_._2), schema)
   }
 
-  /** Move each `{tmp}/{RouteCol}={part}/part-*.parquet` into
-    * `_data/{part}/{uuid}.parquet` (rename-based finalize: files are
-    * invisible until the log append, same crash semantics as the reference's
-    * PUT-then-log — ARCHITECTURE.md:180-186). */
-  private def collectTempParts(tmp: String): Seq[FileMarker] = {
-    val f = fs
-    val tmpPath = new Path(tmp)
-    val renamed = mutable.ArrayBuffer.empty[(String, Path, Long)]
-    val dirs = f.listStatus(tmpPath).filter(_.isDirectory)
-    dirs.foreach { d =>
-      val dirName = d.getPath.getName
-      val part = IceTable.unescapePathName(
-        dirName.stripPrefix(s"${IceTable.RouteCol}="))
-      IceTable.requirePartitionSafe(part)
-      f.listStatus(d.getPath)
+  /** The one data-file writer every engine write ends in: insert,
+    * custom-insert SQL, merge/optimize, recluster, repartition and CoW
+    * rewrites. Writes `arranged` as-is into a fresh `_tmp/{uuid}` staging
+    * dir — `partition = None` splits it by the route column
+    * (`partitionBy`), `Some(p)` puts every output file in `p` — then
+    * renames each file to `_data/{partition}/{uuid}.parquet` (invisible
+    * until the caller's log append: the reference's PUT-then-log crash
+    * semantics, ARCHITECTURE.md:180-186) and reads its footer once for the
+    * marker. The staging dir is deleted whether the write succeeds or
+    * throws. */
+  private def writeDataFiles(
+      arranged: DataFrame, partition: Option[String]): Seq[FileMarker] = {
+    partition.foreach(IceTable.requirePartitionSafe)
+    val tmp = new Path(s"$root/_tmp/${UUID.randomUUID()}")
+    val local = localWriteFs(arranged.sparkSession)
+    val f = local.getOrElse(fs)
+    try {
+      val w0 = arranged.write
+        .option("compression", cfg.compressionCodec)
+        .option("parquet.block.size", cfg.parquetBlockBytes)
+      val w1 = if (partition.isEmpty) w0.partitionBy(IceTable.RouteCol) else w0
+      val w2 = cfg.rowGroupRows
+        .fold(w1)(n => w1.option("parquet.block.row.count.limit", n))
+      // per-write options reach only this job's Hadoop conf; the uncached
+      // instance keeps the process-wide `file:` FileSystem untouched
+      val w3 = if (local.isEmpty) w2 else w2
+        .option("fs.file.impl", classOf[LocalWriteFileSystem].getName)
+        .option("fs.file.impl.disable.cache", "true")
+      withBloomOptions(w3).parquet(tmp.toString)
+      def parquetIn(dir: Path): Seq[Path] = f.listStatus(dir).toSeq
         .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-        .foreach { st =>
-          val rel = dataFileRel(part)
-          val dest = new Path(root, rel)
-          f.mkdirs(dest.getParent)
-          if (!f.rename(st.getPath, dest))
-            throw new java.io.IOException(s"failed to finalize $dest")
-          renamed += ((rel, dest, f.getFileStatus(dest).getLen))
+        .map(_.getPath).sortBy(_.getName)
+      val staged: Seq[(String, Path)] = partition match {
+        case Some(p) => parquetIn(tmp).map(p -> _)
+        case None =>
+          f.listStatus(tmp).toSeq.filter(_.isDirectory).flatMap { d =>
+            val part = IceTable.unescapePathName(
+              d.getPath.getName.stripPrefix(s"${IceTable.RouteCol}="))
+            IceTable.requirePartitionSafe(part)
+            parquetIn(d.getPath).map(part -> _)
+          }
+      }
+      val renamed = staged.map { case (part, src) =>
+        val rel = dataFileRel(part)
+        val dest = new Path(root, rel)
+        f.mkdirs(dest.getParent)
+        if (!f.rename(src, dest))
+          throw new java.io.IOException(s"failed to finalize $dest")
+        (rel, dest, f.getFileStatus(dest).getLen)
+      }
+      // a routed insert fans its footer reads out on the bounded pool (a
+      // 10³-partition insert against an object store would otherwise pay
+      // 10³ sequential footer GETs on the driver); single-partition writes
+      // already run inside pool futures, so they stay serial (leaf-only)
+      val infos =
+        if (partition.isDefined || renamed.size < 2)
+          renamed.map(r => footerInfo(r._2))
+        else {
+          import scala.concurrent.{Await, Future}
+          import scala.concurrent.duration.Duration
+          implicit val ec: scala.concurrent.ExecutionContext = IceTable.insertPool
+          Await.result(Future.traverse(renamed)(r => Future(footerInfo(r._2))),
+            Duration.Inf)
         }
+      renamed.zip(infos).map { case ((rel, _, len), (rc, statsAll)) =>
+        val (primary, extra) = splitStats(statsAll)
+        FileMarker(rel, now(), len, stats = primary, multiStats = extra,
+          rowCount = rc)
+      }
+    } finally {
+      // best-effort: a leftover staging dir is swept by vacuumOrphans
+      try f.delete(tmp, true) catch { case _: java.io.IOException => () }
     }
-    f.delete(tmpPath, true)
-    // footer reads (row count + stats) fan out on the bounded pool
-    // (leaf-only reads): a 10³-partition insert against an object store
-    // would otherwise pay 10³ sequential footer GETs on the driver
-    val infoByRel: Map[String, (Option[Long], Map[String, (String, String)])] = {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      implicit val ec: scala.concurrent.ExecutionContext = IceTable.insertPool
-      Await.result(
-        Future.traverse(renamed.toSeq) { case (rel, dest, _) =>
-          Future(rel -> footerInfo(dest))
-        }, Duration.Inf).toMap
-    }
-    renamed.toSeq.map { case (rel, _, len) =>
-      val (rc, statsAll) = infoByRel.getOrElse(rel,
-        (Option.empty[Long], Map.empty[String, (String, String)]))
-      val (primary, extra) = splitStats(statsAll)
-      FileMarker(rel, now(), len, stats = primary, multiStats = extra,
-        rowCount = rc)
-    }
+  }
+
+  /** [[LocalWriteFileSystem]] (no forked chmod per file or directory)
+    * when the root is `file:` and the session leaves `fs.file.impl` at
+    * Hadoop's default; None = write through the session's own file system
+    * (object stores, custom schemes, a session-chosen local impl). */
+  private def localWriteFs(session: SparkSession)
+      : Option[org.apache.hadoop.fs.FileSystem] = {
+    val impl = Option(hadoopConf.get("fs.file.impl"))
+      .orElse(session.conf.getOption("fs.file.impl"))
+    if (fs.getUri.getScheme == "file" && impl.forall(_.isEmpty)) Some(localFs)
+    else None
+  }
+  private lazy val localFs: org.apache.hadoop.fs.FileSystem = {
+    val l = new LocalWriteFileSystem
+    l.initialize(fs.getUri, hadoopConf)
+    l
   }
 
   /** All configured stats columns (primary first). */
   private def statsCols: Seq[String] =
     (cfg.statsColumn.toSeq ++ cfg.statsColumns).distinct
 
-  /** One footer read at write time: [min, max] of every configured stats
-    * column across the file's row groups, as canonical strings. A column
-    * is omitted when absent/non-primitive or any row group lacks stats for
-    * it — the marker then stays conservatively un-prunable on that column
-    * (other columns still record). */
   /** ONE footer open per written file: physical row count (for the `rc`
     * marker field — metadata-only `count(*)` at read time) plus the
     * configured columns' `[min, max]`. The row count comes from the same
@@ -1157,49 +1187,55 @@ final class IceTable(
   private def footerInfo(dest: Path)
       : (Option[Long], Map[String, (String, String)]) = {
     try {
+      // explicit read options: the one-argument open builds a fresh Hadoop
+      // Configuration (a core-default.xml parse, ~10 ms) per file
       val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(dest, hadoopConf))
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(dest, hadoopConf),
+        org.apache.parquet.HadoopReadOptions.builder(hadoopConf).build())
       try (Some(reader.getRecordCount), footerStatsAll(reader))
       finally reader.close()
     } catch { case _: Exception => (None, Map.empty) }
   }
 
+  /** Footer stats of a written file: [min, max] of every configured stats
+    * column across the file's row groups, as canonical strings. A column
+    * is omitted when absent/non-primitive or any row group lacks stats for
+    * it — the marker then stays conservatively un-prunable on that column
+    * (other columns still record). */
   private def footerStatsAll(
       reader: org.apache.parquet.hadoop.ParquetFileReader)
       : Map[String, (String, String)] = {
     val cols = statsCols
     if (cols.isEmpty) return Map.empty
     try {
-      {
-        val wanted = cols.toSet
-        val min = mutable.Map.empty[String, Comparable[Any]]
-        val max = mutable.Map.empty[String, Comparable[Any]]
-        val bad = mutable.Set.empty[String]
-        val nonEmpty = !reader.getFooter.getBlocks.isEmpty
-        reader.getFooter.getBlocks.forEach { b =>
-          val found = mutable.Set.empty[String]
-          b.getColumns.forEach { c =>
-            val name = c.getPath.toDotString
-            if (wanted(name)) {
-              found += name
-              val st = c.getStatistics
-              if (st == null || !st.hasNonNullValue) bad += name
-              else {
-                val mn = st.genericGetMin.asInstanceOf[Comparable[Any]]
-                val mx = st.genericGetMax.asInstanceOf[Comparable[Any]]
-                if (!min.contains(name) || mn.compareTo(min(name).asInstanceOf[Any]) < 0)
-                  min(name) = mn
-                if (!max.contains(name) || mx.compareTo(max(name).asInstanceOf[Any]) > 0)
-                  max(name) = mx
-              }
+      val wanted = cols.toSet
+      val min = mutable.Map.empty[String, Comparable[Any]]
+      val max = mutable.Map.empty[String, Comparable[Any]]
+      val bad = mutable.Set.empty[String]
+      val nonEmpty = !reader.getFooter.getBlocks.isEmpty
+      reader.getFooter.getBlocks.forEach { b =>
+        val found = mutable.Set.empty[String]
+        b.getColumns.forEach { c =>
+          val name = c.getPath.toDotString
+          if (wanted(name)) {
+            found += name
+            val st = c.getStatistics
+            if (st == null || !st.hasNonNullValue) bad += name
+            else {
+              val mn = st.genericGetMin.asInstanceOf[Comparable[Any]]
+              val mx = st.genericGetMax.asInstanceOf[Comparable[Any]]
+              if (!min.contains(name) || mn.compareTo(min(name).asInstanceOf[Any]) < 0)
+                min(name) = mn
+              if (!max.contains(name) || mx.compareTo(max(name).asInstanceOf[Any]) > 0)
+                max(name) = mx
             }
           }
-          wanted.diff(found).foreach(bad += _)
         }
-        if (!nonEmpty) Map.empty
-        else cols.filter(c => !bad(c) && min.contains(c))
-          .map(c => c -> (statString(min(c)), statString(max(c)))).toMap
+        wanted.diff(found).foreach(bad += _)
       }
+      if (!nonEmpty) Map.empty
+      else cols.filter(c => !bad(c) && min.contains(c))
+        .map(c => c -> (statString(min(c)), statString(max(c)))).toMap
     } catch { case _: Exception => Map.empty }
   }
 
@@ -1574,7 +1610,7 @@ final class IceTable(
     * and a mutation's join/filter may not preserve that — losing it would
     * silently widen row-group stats on exactly the rewritten files. */
   private[ice] def writeSingleFileFor(df: DataFrame, partition: String): FileMarker =
-    writeSingleFile(df, dataFileRel(partition),
+    writeSingleFile(df, partition,
       cfg.sortOrder.filter(df.columns.contains).map(col))
 
   /** Atomic full-content REPLACEMENT of the table with `newContent`
@@ -1604,35 +1640,17 @@ final class IceTable(
     stamped.length
   }
 
+  /** One file in `partition` (fresh uuid name) holding all of `df`. */
   private def writeSingleFile(
-      df: DataFrame, destRel: String,
+      df: DataFrame, partition: String,
       sortCols: Seq[Column] = Nil): FileMarker = {
-    IceTable.requirePartitionSafe(destRel)
-    val tmp = s"$root/_tmp/${UUID.randomUUID()}"
     // sort AFTER the coalesce: sorting the inputs per-partition and then
     // coalescing would concatenate sorted runs, not produce a sorted file
     val arranged =
       if (sortCols.nonEmpty) df.coalesce(1).sortWithinPartitions(sortCols: _*)
       else df.coalesce(1)
-    val writer = arranged.write
-      .option("compression", cfg.compressionCodec)
-      .option("parquet.block.size", cfg.parquetBlockBytes)
-    val withRows = cfg.rowGroupRows
-      .fold(writer)(n => writer.option("parquet.block.row.count.limit", n))
-    withBloomOptions(withRows).parquet(tmp)
-    val f = fs
-    val file = f.listStatus(new Path(tmp))
-      .find(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-      .getOrElse(throw new java.io.IOException(s"no parquet output in $tmp"))
-    val dest = new Path(root, destRel)
-    f.mkdirs(dest.getParent)
-    if (!f.rename(file.getPath, dest))
-      throw new java.io.IOException(s"failed to finalize $dest")
-    f.delete(new Path(tmp), true)
-    val (rc, statsAll) = footerInfo(dest)
-    val (primary, extra) = splitStats(statsAll)
-    FileMarker(destRel, now(), f.getFileStatus(dest).getLen,
-      stats = primary, multiStats = extra, rowCount = rc)
+    writeDataFiles(arranged, Some(partition)).headOption.getOrElse(
+      throw new java.io.IOException(s"no parquet output for partition $partition"))
   }
 
   // ------------------------------------------------------------- merge (A10)
@@ -1844,8 +1862,7 @@ final class IceTable(
         src.createOrReplaceTempView(view)
         spark.sql(q.replaceAll("\\bsource_files\\b", view))
     }
-    val outRel = dataFileRel(partition)
-    val preMarker = writeSingleFile(merged, outRel, mergeSortCols)
+    val preMarker = writeSingleFile(merged, partition, mergeSortCols)
 
     // Log rewrite (icedb/icedb.py:290-322): re-read exactly the source logs
     // of the merged markers, tombstone merged paths, carry forward untouched
@@ -2004,7 +2021,7 @@ final class IceTable(
             if (filesPer == 1) src.coalesce(1).sortWithinPartitions(clusterExpr)
             else src.repartitionByRange(filesPer, clusterExpr)
               .sortWithinPartitions(clusterExpr)
-          writeFiles(clustered, partition)
+          writeDataFiles(clustered, Some(partition))
         }
       }, Duration.Inf)
 
@@ -2080,37 +2097,6 @@ final class IceTable(
     stamped.length
   }
 
-  /** Multi-file variant of [[writeSingleFile]]: write `df` as-is (one file
-    * per Spark partition; empty partitions produce nothing), finalize each
-    * into `_data/{partition}/`, and record footer stats per file. */
-  private def writeFiles(df: DataFrame, partition: String): Seq[FileMarker] = {
-    val tmp = s"$root/_tmp/${UUID.randomUUID()}"
-    val writer = df.write
-      .option("compression", cfg.compressionCodec)
-      .option("parquet.block.size", cfg.parquetBlockBytes)
-    val withRows = cfg.rowGroupRows
-      .fold(writer)(n => writer.option("parquet.block.row.count.limit", n))
-    withBloomOptions(withRows).parquet(tmp)
-    val f = fs
-    val parts = f.listStatus(new Path(tmp))
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-      .sortBy(_.getPath.getName)
-    IceTable.requirePartitionSafe(partition)
-    val markers = parts.toSeq.map { st =>
-      val rel = dataFileRel(partition)
-      val dest = new Path(root, rel)
-      f.mkdirs(dest.getParent)
-      if (!f.rename(st.getPath, dest))
-        throw new java.io.IOException(s"failed to finalize $dest")
-      val (rc, statsAll) = footerInfo(dest)
-      val (primary, extra) = splitStats(statsAll)
-      FileMarker(rel, now(), f.getFileStatus(dest).getLen,
-        stats = primary, multiStats = extra, rowCount = rc)
-    }
-    f.delete(new Path(tmp), true)
-    markers
-  }
-
   /** Run each partition's merge job concurrently, then write one merged
     * log covering all of them (the multi-partition generalization of
     * [[executeMerge]]'s log rewrite). */
@@ -2129,8 +2115,7 @@ final class IceTable(
           val src = readFilesApplyingDeletes(snap, acc)
           cfg.customMergeSql match {
             case None =>
-              (writeSingleFile(src, dataFileRel(partition),
-                mergeSortCols),
+              (writeSingleFile(src, partition, mergeSortCols),
                 Schema.fromStructType(src.schema))
             case Some(q) =>
               val view = s"source_files_${UUID.randomUUID().toString.replace("-", "")}"
@@ -2138,7 +2123,7 @@ final class IceTable(
               try {
                 val merged = spark.sql(q.replaceAll("\\bsource_files\\b", view))
                 // write executes the plan, so the view can drop right after
-                (writeSingleFile(merged, dataFileRel(partition)),
+                (writeSingleFile(merged, partition),
                   Schema.fromStructType(merged.schema))
               } finally spark.catalog.dropTempView(view)
           }
@@ -2818,8 +2803,7 @@ final class IceTable(
         Future.traverse(targets) { old =>
           Future {
             val result = transform(readFilesApplyingDeletes(snap, Seq(old)))
-            writeSingleFile(result,
-              dataFileRel(targetPartition))
+            writeSingleFile(result, targetPartition)
           }
         }, Duration.Inf)
     }

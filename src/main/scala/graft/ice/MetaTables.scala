@@ -85,6 +85,7 @@ object MetaTables {
     * regardless of file size. */
   private def footerRowCounts(
       spark: SparkSession, root: String, paths: Seq[String]): DataFrame = {
+    import org.apache.parquet.HadoopReadOptions
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
     val hconf = new SerializableConfiguration(
@@ -92,11 +93,16 @@ object MetaTables {
     val counts = spark.sparkContext
       .parallelize(paths, math.max(1,
         math.min(paths.size, spark.sparkContext.defaultParallelism)))
-      .map { p =>
-        val reader = ParquetFileReader.open(
-          HadoopInputFile.fromPath(new Path(s"$root/$p"), hconf.value))
-        try Row(p, reader.getRecordCount)
-        finally reader.close()
+      .mapPartitions { ps =>
+        // explicit read options: the one-argument open builds a fresh
+        // Hadoop Configuration per file
+        val opts = HadoopReadOptions.builder(hconf.value).build()
+        ps.map { p =>
+          val reader = ParquetFileReader.open(
+            HadoopInputFile.fromPath(new Path(s"$root/$p"), hconf.value), opts)
+          try Row(p, reader.getRecordCount)
+          finally reader.close()
+        }
       }
     spark.createDataFrame(counts, StructType(Seq(
       StructField("file", StringType, nullable = false),
