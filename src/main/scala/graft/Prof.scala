@@ -197,8 +197,8 @@ object Prof {
 
   /** Decomposition of optimize_2000: build the 2000-file table once, then
     * split the merge cost into scan / scan+sort / scan+sort+write phases
-    * (per partition, like commitMerges does) before timing the real
-    * optimize() on a fresh build. */
+    * (per partition, like optimize's rewrite executor does) before timing
+    * the real optimize() on a fresh build. */
   private def opt2000Prof(spark: SparkSession): Unit = {
     import org.apache.spark.sql.functions._
     import graft.ice.{IceTable, IceTableConfig}

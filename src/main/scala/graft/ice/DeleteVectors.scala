@@ -143,21 +143,14 @@ object DeleteVectors {
       val snap = main.snapshot()
       val targets = snap.aliveFiles.filter(m => affectedPaths(m.path))
       if (targets.isEmpty) return 0
-      val newFiles: Seq[FileMarker] = {
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.Duration
-        implicit val ec: scala.concurrent.ExecutionContext = IceTable.insertPool
-        Await.result(Future.traverse(targets) { m =>
-          Future {
-            val kept = main.spark.read.schema(snap.schema.toStructType)
-              .parquet(s"${main.root}/${m.path}")
-              .withColumn("_dv_row", col("_metadata.row_index"))
-              .join(broadcast(deletes.where(col("path") === m.path)
-                .select(col("row_index").as("_dv_row"))), Seq("_dv_row"), "left_anti")
-              .drop("_dv_row")
-            main.writeSingleFileFor(kept, main.partitionOf(m.path))
-          }
-        }, Duration.Inf)
+      val newFiles: Seq[FileMarker] = IceTable.onInsertPool(targets) { m =>
+        val kept = main.spark.read.schema(snap.schema.toStructType)
+          .parquet(s"${main.root}/${m.path}")
+          .withColumn("_dv_row", col("_metadata.row_index"))
+          .join(broadcast(deletes.where(col("path") === m.path)
+            .select(col("row_index").as("_dv_row"))), Seq("_dv_row"), "left_anti")
+          .drop("_dv_row")
+        main.writeSingleFileFor(kept, main.partitionOf(m.path))
       }
       try {
         // validatedRewriteCommit re-checks the dv stamp AND the sources

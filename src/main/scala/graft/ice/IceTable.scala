@@ -339,10 +339,7 @@ final class IceTable(
 
   /** Partition string of a data path: the segment between `_data/` and the
     * file name (reference: icedb/icedb.py:103-108). */
-  def partitionOf(path: String): String = {
-    val base = path.split("_data/", 2)(1)
-    base.split("/").dropRight(1).mkString("/")
-  }
+  def partitionOf(path: String): String = IceTable.partitionOfPath(path)
 
 
   // -------------------------------------------------------------- read (B1+)
@@ -1055,26 +1052,20 @@ final class IceTable(
     // thread pool (icedb.py:205-215) — at 10³-10⁴ partitions a serial
     // driver loop of Spark jobs is the bottleneck. Leaf-only futures: each
     // submits one Spark job + a rename, and never blocks on this pool.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: scala.concurrent.ExecutionContext = IceTable.insertPool
-    val results: Seq[(Schema, FileMarker)] = Await.result(
-      Future.traverse(parts.toSeq) { p =>
-        Future {
-          val view = s"_rows_${UUID.randomUUID().toString.replace("-", "")}"
-          // resolve the view through the DataFrame's OWN session: inside
-          // foreachBatch the batch belongs to a per-micro-batch session
-          // whose temp catalog the table's outer session cannot see
-          val ss = routed.sparkSession
-          routed.filter(col(IceTable.RouteCol) === p).drop(IceTable.RouteCol)
-            .createOrReplaceTempView(view)
-          try {
-            val result = ss.sql(sql.replaceAll("\\b_rows\\b", view))
-            val s = Schema.fromStructType(result.schema)
-            (s, writeSingleFile(result, p))
-          } finally ss.catalog.dropTempView(view)
-        }
-      }, Duration.Inf)
+    val results: Seq[(Schema, FileMarker)] = IceTable.onInsertPool(parts.toSeq) { p =>
+      val view = s"_rows_${UUID.randomUUID().toString.replace("-", "")}"
+      // resolve the view through the DataFrame's OWN session: inside
+      // foreachBatch the batch belongs to a per-micro-batch session
+      // whose temp catalog the table's outer session cannot see
+      val ss = routed.sparkSession
+      routed.filter(col(IceTable.RouteCol) === p).drop(IceTable.RouteCol)
+        .createOrReplaceTempView(view)
+      try {
+        val result = ss.sql(sql.replaceAll("\\b_rows\\b", view))
+        val s = Schema.fromStructType(result.schema)
+        (s, writeSingleFile(result, p))
+      } finally ss.catalog.dropTempView(view)
+    }
     // fold on the caller thread in sorted partition order, so a schema
     // conflict raises at the same partition the serial loop would have
     val schema = new Schema
@@ -1139,13 +1130,7 @@ final class IceTable(
       val infos =
         if (partition.isDefined || renamed.size < 2)
           renamed.map(r => footerInfo(r._2))
-        else {
-          import scala.concurrent.{Await, Future}
-          import scala.concurrent.duration.Duration
-          implicit val ec: scala.concurrent.ExecutionContext = IceTable.insertPool
-          Await.result(Future.traverse(renamed)(r => Future(footerInfo(r._2))),
-            Duration.Inf)
-        }
+        else IceTable.onInsertPool(renamed)(r => footerInfo(r._2))
       renamed.zip(infos).map { case ((rel, _, len), (rc, statsAll)) =>
         val (primary, extra) = splitStats(statsAll)
         FileMarker(rel, now(), len, stats = primary, multiStats = extra,
@@ -1253,10 +1238,11 @@ final class IceTable(
     case other => other.toString
   }
 
-  /** Sort applied to default-merge output (see `IceTableConfig.sortOnMerge`). */
-  private def mergeSortCols: Seq[Column] =
+  /** Merge/optimize output: one file, re-sorted for a default merge under
+    * `IceTableConfig.sortOnMerge`. */
+  private def mergeArrange(df: DataFrame): DataFrame = oneFile(df,
     if (cfg.sortOnMerge && cfg.customMergeSql.isEmpty) cfg.sortOrder.map(col)
-    else Nil
+    else Nil)
 
   /** Row-level UPDATE (copy-on-write, atomic): rewrite ONLY the files
     * containing rows that match `cond`, with `assignments` applied to the
@@ -1400,24 +1386,17 @@ final class IceTable(
           hits.map(_.getLong(1)).sum, sch)
     }
     // per-file anti-join rewrites fan out on the bounded pool
-    val rewritten: Seq[FileMarker] = {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      implicit val ec: scala.concurrent.ExecutionContext = IceTable.insertPool
-      Await.result(Future.traverse(targets) { m =>
-        Future {
-          val kept = applyDv(scanMarkers(schema, Seq(m))
-              .withColumn("_p", lit(m.path))
-              .withColumn("_r", col("_metadata.row_index")))
-            .drop("_p", "_r")
-            .join(srcKeys, keyCols, "left_anti")
-          val out = writeSingleFileFor(kept, partitionOf(m.path))
-          // fully-emptied file: tombstone only, never an alive empty file
-          if (out.rowCount.contains(0L)) { logio.delete(root, out.path); None }
-          else Some(out)
-        }
-      }, Duration.Inf).flatten
-    }
+    val rewritten: Seq[FileMarker] = IceTable.onInsertPool(targets) { m =>
+      val kept = applyDv(scanMarkers(schema, Seq(m))
+          .withColumn("_p", lit(m.path))
+          .withColumn("_r", col("_metadata.row_index")))
+        .drop("_p", "_r")
+        .join(srcKeys, keyCols, "left_anti")
+      val out = writeSingleFileFor(kept, partitionOf(m.path))
+      // fully-emptied file: tombstone only, never an alive empty file
+      if (out.rowCount.contains(0L)) { logio.delete(root, out.path); None }
+      else Some(out)
+    }.flatten
     // new rows go through the SAME routing pipeline as insert (formatRow,
     // `_partition` fast path, partitionFunc, custom insert SQL) — a bare
     // partitionExpr would misplace rows on tables configured with any of
@@ -1469,24 +1448,17 @@ final class IceTable(
     val deleted = hits.map(_.getLong(1)).sum
     val affected = hits.map(_.getString(0)).toSet
     val targets = snap.aliveFiles.filter(m => affected(m.path))
-    val rewritten: Seq[FileMarker] = {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      implicit val ec: scala.concurrent.ExecutionContext = IceTable.insertPool
-      Await.result(Future.traverse(targets) { m =>
-        Future {
-          val kept = applyDv(scanMarkers(schema, Seq(m))
-              .withColumn("_p", lit(m.path))
-              .withColumn("_r", col("_metadata.row_index")))
-            .drop("_p", "_r")
-            .join(srcKeys, keyCols, "left_anti")
-          val out = writeSingleFileFor(kept, partitionOf(m.path))
-          // fully-emptied file: tombstone only, never an alive empty file
-          if (out.rowCount.contains(0L)) { logio.delete(root, out.path); None }
-          else Some(out)
-        }
-      }, Duration.Inf).flatten
-    }
+    val rewritten: Seq[FileMarker] = IceTable.onInsertPool(targets) { m =>
+      val kept = applyDv(scanMarkers(schema, Seq(m))
+          .withColumn("_p", lit(m.path))
+          .withColumn("_r", col("_metadata.row_index")))
+        .drop("_p", "_r")
+        .join(srcKeys, keyCols, "left_anti")
+      val out = writeSingleFileFor(kept, partitionOf(m.path))
+      // fully-emptied file: tombstone only, never an alive empty file
+      if (out.rowCount.contains(0L)) { logio.delete(root, out.path); None }
+      else Some(out)
+    }.flatten
     validatedRewriteCommit(targets, rewritten, Seq.empty, dvStampAtRead)
     maybeCheckpoint()
     deleted
@@ -1582,24 +1554,17 @@ final class IceTable(
     // source WITHOUT a replacement — an empty file would survive alive
     // forever, padding every later scan's file list (and, on MV tables,
     // carrying the pre-narrowing union schema past a rebase).
-    val newFiles: Seq[FileMarker] = {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      implicit val ec: scala.concurrent.ExecutionContext = IceTable.insertPool
-      Await.result(Future.traverse(rewriteTargets) { m =>
-        Future {
-          val src = applyDv(scanMarkers(schema, Seq(m))
-            .withColumn("_p", lit(m.path))
-            .withColumn("_r", col("_metadata.row_index")))
-            .drop("_p", "_r")
-          val part = partitionOf(m.path)
-          val out = writeSingleFileFor(
-            transform(withVirtFor(src, part)).drop(virtKeys: _*), part)
-          if (out.rowCount.contains(0L)) { logio.delete(root, out.path); None }
-          else Some(out)
-        }
-      }, Duration.Inf).flatten
-    }
+    val newFiles: Seq[FileMarker] = IceTable.onInsertPool(rewriteTargets) { m =>
+      val src = applyDv(scanMarkers(schema, Seq(m))
+        .withColumn("_p", lit(m.path))
+        .withColumn("_r", col("_metadata.row_index")))
+        .drop("_p", "_r")
+      val part = partitionOf(m.path)
+      val out = writeSingleFileFor(
+        transform(withVirtFor(src, part)).drop(virtKeys: _*), part)
+      if (out.rowCount.contains(0L)) { logio.delete(root, out.path); None }
+      else Some(out)
+    }.flatten
     validatedRewriteCommit(targets, newFiles, Seq(outSchema), dvStampAtRead)
     matched
   }
@@ -1643,25 +1608,24 @@ final class IceTable(
   /** One file in `partition` (fresh uuid name) holding all of `df`. */
   private def writeSingleFile(
       df: DataFrame, partition: String,
-      sortCols: Seq[Column] = Nil): FileMarker = {
-    // sort AFTER the coalesce: sorting the inputs per-partition and then
-    // coalescing would concatenate sorted runs, not produce a sorted file
-    val arranged =
-      if (sortCols.nonEmpty) df.coalesce(1).sortWithinPartitions(sortCols: _*)
-      else df.coalesce(1)
-    writeDataFiles(arranged, Some(partition)).headOption.getOrElse(
+      sortCols: Seq[Column] = Nil): FileMarker =
+    writeDataFiles(oneFile(df, sortCols), Some(partition)).headOption.getOrElse(
       throw new java.io.IOException(s"no parquet output for partition $partition"))
-  }
+
+  /** All of `df` in one output file, sorted AFTER the coalesce: sorting
+    * the inputs per-partition and then coalescing would concatenate sorted
+    * runs, not produce a sorted file. */
+  private def oneFile(df: DataFrame, sortCols: Seq[Column]): DataFrame =
+    if (sortCols.isEmpty) df.coalesce(1)
+    else df.coalesce(1).sortWithinPartitions(sortCols: _*)
 
   // ------------------------------------------------------------- merge (A10)
 
-  /** A10-A14 compaction: exact port of the greedy candidate policy
-    * (icedb/icedb.py:243-261 — size-asc accumulation, `>=` byte threshold
-    * *including* the crossing file, `len>1 && len>=max_file_count` cap,
-    * partitions visited by file count desc (`asc=false`, hot-first) or asc
-    * (full optimize), one partition per call). Data exec is a Spark job:
+  /** A10-A14 compaction, one partition per call like the reference
+    * (icedb/icedb.py:223-325): the first group of [[IceTable.planMerges]]
+    * (hot-first when `asc = false`) runs through [[rewriteGroups]] —
     * explicit file list → optional custom merge SQL over a `source_files`
-    * view → one output file.
+    * view → one output file → one validated merged-log append.
     *
     * Deviation (documented): the reference reads candidates with DuckDB
     * `hive_partitioning=1`, which bakes partition-dir keys into the merged
@@ -1683,8 +1647,15 @@ final class IceTable(
     var ts = snapshotTs
     var attempts = 0
     while (attempts < 5) {
-      try return mergeOnce(maxFileSize, maxFileCount, asc, ts)
-      catch {
+      try {
+        val snap = trySnapshot(ts.getOrElse(coveringTs())).getOrElse(return None)
+        return IceTable.planMerges(snap, maxFileSize, maxFileCount, asc)
+          .headOption.map { case group @ (partition, sources) =>
+            val (newLog, meta, stamped) = rewriteGroups(snap, Seq(group),
+              dvStamp(), cfg.customMergeSql)(mergeArrange)
+            MergeResult(newLog, stamped.head, partition, sources, meta)
+          }
+      } catch {
         case _: CommitConflictException =>
           attempts += 1
           ts = None
@@ -1692,43 +1663,6 @@ final class IceTable(
     }
     throw new CommitConflictException(
       s"merge lost $attempts consecutive commit races; giving up")
-  }
-
-  private def mergeOnce(
-      maxFileSize: Long,
-      maxFileCount: Int,
-      asc: Boolean,
-      snapshotTs: Option[Long]): Option[MergeResult] = {
-    val snap = trySnapshot(snapshotTs.getOrElse(coveringTs())).getOrElse(return None)
-
-    // group *all* current markers (incl. tombstoned) like icedb.py:234-240
-    val partitions = snap.files.groupBy(f => partitionOf(f.path))
-    val ordered = partitions.toSeq.sortBy { case (p, ms) =>
-      (if (asc) ms.length else -ms.length, p)
-    }
-
-    ordered.foreach { case (partition, fileMarkers) =>
-      if (fileMarkers.length > 1) {
-        val sortedMs = fileMarkers.sortBy(_.fileBytes)
-        var accBytes = 0L
-        val acc = mutable.ArrayBuffer.empty[FileMarker]
-        val it = sortedMs.iterator
-        var done = false
-        while (it.hasNext && !done) {
-          val m = it.next()
-          if (m.tombstone.isEmpty) {
-            accBytes += m.fileBytes
-            acc += m
-            if (accBytes >= maxFileSize ||
-              (acc.length > 1 && acc.length >= maxFileCount)) done = true
-          }
-        }
-        if (acc.length > 1) {
-          return Some(executeMerge(snap, partition, acc.toSeq))
-        }
-      }
-    }
-    None
   }
 
   /** Commit-time validation under the table's JVM-wide commit lock: every
@@ -1845,38 +1779,42 @@ final class IceTable(
         throw e
     }
 
-  private def executeMerge(
+  /** The one rewrite executor behind merge / optimize / recluster: every
+    * (partition, sources) group reads its sources under `snap` with
+    * deletes applied, runs `mergeSql` (if any) over them as the
+    * `source_files` view, and writes `arrange` of the result into its
+    * partition; the groups run concurrently on the insert pool (disjoint
+    * partitions touch disjoint files). All outputs then commit in ONE
+    * [[validatedRewriteCommit]] (the log rewrite of icedb/icedb.py:290-322,
+    * one append for every group); on conflict the outputs are deleted and
+    * the [[CommitConflictException]] propagates.
+    *
+    * The view name is made unique so concurrent merges of different
+    * tables in one session never race, and it is dropped once the write
+    * has executed the plan. Deviation from the reference (which carries
+    * the source-log schema verbatim, icedb.py:291-293): a custom merge SQL
+    * may *reshape* columns; its output schema accumulates add-only (type
+    * conflicts still throw). */
+  private def rewriteGroups(
       snap: IceSnapshot,
-      partition: String,
-      acc: Seq[FileMarker]): MergeResult = {
-    val dvStampAtRead = dvStamp() // BEFORE the dv-applying read
-    val src = readFilesApplyingDeletes(snap, acc)
-    // the `source_files` view name is rewritten to a unique name so
-    // concurrent merges of *different* tables in one session never race
-    // (merges of the SAME table still require the reference's external
-    // exclusive lock — ARCHITECTURE.md:117,158-165)
-    val merged = cfg.customMergeSql match {
-      case None => src
-      case Some(q) =>
-        val view = s"source_files_${UUID.randomUUID().toString.replace("-", "")}"
-        src.createOrReplaceTempView(view)
-        spark.sql(q.replaceAll("\\bsource_files\\b", view))
+      groups: Seq[(String, Seq[FileMarker])],
+      dvStampAtRead: Option[String],
+      mergeSql: Option[String] = None)(
+      arrange: DataFrame => DataFrame): (String, LogMetadata, Seq[FileMarker]) = {
+    val written = IceTable.onInsertPool(groups) { case (partition, sources) =>
+      val src = readFilesApplyingDeletes(snap, sources)
+      val view = s"source_files_${UUID.randomUUID().toString.replace("-", "")}"
+      try {
+        val out = mergeSql.fold(src) { q =>
+          src.createOrReplaceTempView(view)
+          spark.sql(q.replaceAll("\\bsource_files\\b", view))
+        }
+        (writeDataFiles(arrange(out), Some(partition)),
+          mergeSql.map(_ => Schema.fromStructType(out.schema)))
+      } finally if (mergeSql.isDefined) spark.catalog.dropTempView(view)
     }
-    val preMarker = writeSingleFile(merged, partition, mergeSortCols)
-
-    // Log rewrite (icedb/icedb.py:290-322): re-read exactly the source logs
-    // of the merged markers, tombstone merged paths, carry forward untouched
-    // markers and existing tombstones, tombstone the source logs, one `_m`
-    // append — with the sources revalidated alive under the commit lock (a
-    // conflict deletes the orphaned merge output and aborts).
-    // Deviation from the reference (which carries the source-log schema
-    // verbatim, icedb.py:291-293): a custom merge SQL may *reshape* columns;
-    // its output schema accumulates add-only (type conflicts still throw).
-    val (newLog, meta, stamped) = validatedRewriteCommit(acc, Seq(preMarker),
-      if (cfg.customMergeSql.isDefined) Seq(Schema.fromStructType(merged.schema))
-      else Seq.empty,
-      dvStampAtRead)
-    MergeResult(newLog, stamped.head, partition, acc, meta)
+    validatedRewriteCommit(groups.flatMap(_._2), written.flatMap(_._1),
+      written.flatMap(_._2), dvStampAtRead)
   }
 
   /** Run [[merge]] until no partition has anything left to merge (the
@@ -1885,94 +1823,42 @@ final class IceTable(
   def mergeAll(
       maxFileSize: Long = 10_000_000L,
       maxFileCount: Int = 10,
-      asc: Boolean = true): Int = {
-    var n = 0
-    // Snapshot floor: the next round must SEE the log the last round
-    // committed. `snapshot` filters filenames with strict `<`, and a full
-    // merge round can finish inside one millisecond — snapshotting at a
-    // now() equal to the last commit's timestamp would hide that log,
-    // re-merge the same candidates, and duplicate their rows on the next
-    // compaction. The appended log's *returned* timestamp (collision bumps
-    // included) is the authority.
-    var floor = 0L
-    var more = true
-    while (more) {
-      val ts = math.max(coveringTs(), floor)
-      merge(maxFileSize, maxFileCount, asc, Some(ts)) match {
-        case Some(r) => n += 1; floor = r.meta.timestamp + 1
-        case None => more = false
-      }
-    }
-    n
-  }
+      asc: Boolean = true): Int =
+    Iterator.continually(merge(maxFileSize, maxFileCount, asc)).takeWhile(_.isDefined).length
 
   /** Full-table compaction, Spark-shaped: where the reference's contract is
     * one-partition-per-call (so a caller loop issues N snapshots, N jobs
     * and N log appends — fine for a cron merging the hottest partition,
-    * quadratic pain for "optimize the table"), this picks the same greedy
-    * candidate set for EVERY partition under one snapshot, runs the merge
-    * jobs concurrently on a bounded pool (disjoint partitions touch
-    * disjoint files), and commits them all in ONE merged-log append — a
+    * quadratic pain for "optimize the table"), each round executes EVERY
+    * group [[IceTable.planMerges]] finds under one snapshot through
+    * [[rewriteGroups]]: concurrent merge jobs, ONE merged-log append — a
     * single atomic PUT, so a crash mid-optimize publishes nothing. Repeats
     * in rounds until no partition is mergeable. Returns merges performed.
     *
-    * Same per-partition policy as [[merge]] (size-asc greedy, `>=` byte
-    * threshold, count cap); requires the same external exclusive lock as
-    * any merge (ARCHITECTURE.md:158-165).
+    * Same per-partition policy as [[merge]]; requires the same external
+    * exclusive lock as any merge (ARCHITECTURE.md:158-165).
     */
   def optimize(
       maxFileSize: Long = 10_000_000L,
       maxFileCount: Int = 10): Int = {
     var total = 0
-    var progressed = true
     var conflicts = 0
-    // Same snapshot floor as [[mergeAll]]: a round's commit can land in the
-    // same millisecond the next round snapshots at, and the strict-< filter
-    // would hide it — the same files would merge twice and a later round
-    // would compact both copies into duplicated rows. The committed log's
-    // returned timestamp (collision bumps included) sets the floor.
-    var floor = 0L
-    while (progressed) {
-      progressed = false
-      val snapOpt = trySnapshot(math.max(coveringTs(), floor))
-      snapOpt.foreach { snap =>
-        val candidates = snap.files.groupBy(f => partitionOf(f.path)).toSeq
-          .sortBy(_._1)
-          .flatMap { case (partition, fileMarkers) =>
-            if (fileMarkers.length <= 1) None
-            else {
-              val sortedMs = fileMarkers.sortBy(_.fileBytes)
-              var accBytes = 0L
-              val acc = mutable.ArrayBuffer.empty[FileMarker]
-              val it = sortedMs.iterator
-              var done = false
-              while (it.hasNext && !done) {
-                val m = it.next()
-                if (m.tombstone.isEmpty) {
-                  accBytes += m.fileBytes
-                  acc += m
-                  if (accBytes >= maxFileSize ||
-                    (acc.length > 1 && acc.length >= maxFileCount)) done = true
-                }
-              }
-              if (acc.length > 1) Some(partition -> acc.toSeq) else None
-            }
-          }
-        if (candidates.nonEmpty) {
-          // a lost commit race just re-plans the round from a fresh
-          // snapshot (bounded: each loss burns one of `conflicts`)
-          try {
-            val meta = commitMerges(snap, candidates)
-            floor = meta.timestamp + 1
-            total += candidates.length
-            progressed = true
-          } catch {
-            case e: CommitConflictException =>
-              conflicts += 1
-              if (conflicts >= 5) throw e
-              progressed = true
-          }
-        }
+    var more = true
+    while (more) {
+      val snap = trySnapshot(coveringTs())
+      // partition-name order: the order the round's outputs are logged in
+      val groups = snap.toSeq.flatMap(
+        IceTable.planMerges(_, maxFileSize, maxFileCount, asc = true)).sortBy(_._1)
+      more = groups.nonEmpty
+      // a lost commit race just re-plans the round from a fresh snapshot
+      // (bounded: each loss burns one of `conflicts`)
+      if (more) try {
+        rewriteGroups(snap.get, groups, dvStamp(), cfg.customMergeSql)(mergeArrange)
+        total += groups.length
+      } catch {
+        case e: CommitConflictException =>
+          conflicts += 1
+          if (conflicts >= 5) throw e
       }
     }
     total
@@ -2009,27 +1895,12 @@ final class IceTable(
     val byPart = snap.aliveFiles.groupBy(f => partitionOf(f.path)).toSeq
       .filter { case (p, _) => partitions.forall(_.contains(p)) }
       .sortBy(_._1)
-    if (byPart.isEmpty) return 0
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: scala.concurrent.ExecutionContext = IceTable.insertPool
-    val results: Seq[Seq[FileMarker]] = Await.result(
-      Future.traverse(byPart) { case (partition, ms) =>
-        Future {
-          val src = readFilesApplyingDeletes(snap, ms)
-          val clustered =
-            if (filesPer == 1) src.coalesce(1).sortWithinPartitions(clusterExpr)
-            else src.repartitionByRange(filesPer, clusterExpr)
-              .sortWithinPartitions(clusterExpr)
-          writeDataFiles(clustered, Some(partition))
-        }
-      }, Duration.Inf)
-
-    // one atomic log rewrite, same shape as [[commitMerges]]: tombstone
-    // every source file, add the clustered markers, tombstone source logs
-    // — validated under the commit lock like every other rewrite
-    val allAcc = byPart.flatMap(_._2)
-    validatedRewriteCommit(allAcc, results.flatten, dvStampAtRead = dvStampAtRead)
+    // every alive file of a partition is one group: the optimize executor
+    // with a clustering arrange step instead of the merge one
+    if (byPart.nonEmpty) rewriteGroups(snap, byPart, dvStampAtRead) { src =>
+      if (filesPer == 1) oneFile(src, Seq(clusterExpr))
+      else src.repartitionByRange(filesPer, clusterExpr).sortWithinPartitions(clusterExpr)
+    }
     byPart.length
   }
 
@@ -2095,51 +1966,6 @@ final class IceTable(
     val (_, _, stamped) = commitTable.validatedRewriteCommit(allAcc, written,
       dvStampAtRead = dvStampAtRead)
     stamped.length
-  }
-
-  /** Run each partition's merge job concurrently, then write one merged
-    * log covering all of them (the multi-partition generalization of
-    * [[executeMerge]]'s log rewrite). */
-  private def commitMerges(
-      snap: IceSnapshot,
-      candidates: Seq[(String, Seq[FileMarker])]): LogMetadata = {
-    val dvStampAtRead = dvStamp() // BEFORE the dv-applying reads
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: scala.concurrent.ExecutionContext = IceTable.insertPool
-    // data movement: one single-file merge job per partition, concurrent,
-    // leaf-only on the pool
-    val results: Seq[(FileMarker, Schema)] = Await.result(
-      Future.traverse(candidates) { case (partition, acc) =>
-        Future {
-          val src = readFilesApplyingDeletes(snap, acc)
-          cfg.customMergeSql match {
-            case None =>
-              (writeSingleFile(src, partition, mergeSortCols),
-                Schema.fromStructType(src.schema))
-            case Some(q) =>
-              val view = s"source_files_${UUID.randomUUID().toString.replace("-", "")}"
-              src.createOrReplaceTempView(view)
-              try {
-                val merged = spark.sql(q.replaceAll("\\bsource_files\\b", view))
-                // write executes the plan, so the view can drop right after
-                (writeSingleFile(merged, partition),
-                  Schema.fromStructType(merged.schema))
-              } finally spark.catalog.dropTempView(view)
-          }
-        }
-      }, Duration.Inf)
-    val newMarkers = results.map(_._1)
-
-    // log rewrite over the union of all source logs (icedb.py:290-322
-    // semantics, one append instead of one per partition), with commit-time
-    // validation under the lock (see executeMerge) — on conflict every
-    // freshly-written merge output is deleted before aborting
-    val allAcc = candidates.flatMap(_._2)
-    val (_, meta, _) = validatedRewriteCommit(allAcc, newMarkers,
-      if (cfg.customMergeSql.isDefined) results.map(_._2) else Seq.empty,
-      dvStampAtRead)
-    meta
   }
 
   // ----------------------------------------------------- maintenance (A15-17)
@@ -2795,17 +2621,8 @@ final class IceTable(
     // per-file rewrites run concurrently on the bounded pool (leaf-only:
     // one Spark job + a rename each) — the reference's serial per-file copy
     // (icedb.py:540-567) is a driver bottleneck at high file counts
-    val newFiles: Seq[FileMarker] = {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      implicit val ec: scala.concurrent.ExecutionContext = IceTable.insertPool
-      Await.result(
-        Future.traverse(targets) { old =>
-          Future {
-            val result = transform(readFilesApplyingDeletes(snap, Seq(old)))
-            writeSingleFile(result, targetPartition)
-          }
-        }, Duration.Inf)
+    val newFiles: Seq[FileMarker] = IceTable.onInsertPool(targets) { old =>
+      writeSingleFile(transform(readFilesApplyingDeletes(snap, Seq(old))), targetPartition)
     }
 
     val rewrittenPaths = targets.map(_.path).toSet
@@ -3112,6 +2929,45 @@ object IceTable {
         (r: Runnable) => {
           val t = new Thread(r, "ice-insert"); t.setDaemon(true); t
         }))
+
+  /** `f` over every item concurrently on [[insertPool]]; returns the
+    * results in item order once all are done (the first failure is
+    * rethrown). Leaf-only: a task may submit Spark jobs and do I/O but
+    * must never block on this pool itself — no nested `onInsertPool` —
+    * or a fixed pool whose threads all wait on queued tasks deadlocks. */
+  private[ice] def onInsertPool[A, B](items: Seq[A])(f: A => B): Seq[B] = {
+    implicit val ec: scala.concurrent.ExecutionContext = insertPool
+    scala.concurrent.Await.result(
+      scala.concurrent.Future.traverse(items)(a => scala.concurrent.Future(f(a))),
+      scala.concurrent.duration.Duration.Inf)
+  }
+
+  /** Partition string of a data path: the segment between `_data/` and the
+    * file name (reference: icedb/icedb.py:103-108). */
+  private[ice] def partitionOfPath(path: String): String =
+    path.split("_data/", 2)(1).split("/").dropRight(1).mkString("/")
+
+  /** The one compaction planner: the reference's greedy candidate policy
+    * (icedb/icedb.py:234-261), pure over `snap`. Partitions are grouped
+    * over ALL markers, tombstoned included, and visited by that count —
+    * descending (hot-first) or, with `asc`, ascending — name as tiebreak.
+    * Each accumulates its ALIVE files smallest first and stops at the
+    * file whose bytes reach `maxFileSize` (`>=`, the crossing file
+    * counted) or once `len > 1 && len >= maxFileCount`; a set of more
+    * than one file is a group. (The reference's `> 1` gate on the grouped
+    * count is implied: a set never outgrows its partition.) */
+  private[ice] def planMerges(snap: IceSnapshot, maxFileSize: Long,
+      maxFileCount: Int, asc: Boolean): Seq[(String, Seq[FileMarker])] =
+    snap.files.groupBy(f => partitionOfPath(f.path)).toSeq
+      .sortBy { case (p, ms) => (if (asc) ms.length else -ms.length, p) }
+      .flatMap { case (partition, ms) =>
+        val alive = ms.filter(_.tombstone.isEmpty).sortBy(_.fileBytes).toVector
+        val last = alive.scanLeft(0L)(_ + _.fileBytes).tail.zipWithIndex.indexWhere {
+          case (bytes, i) => bytes >= maxFileSize || (i >= 1 && i + 1 >= maxFileCount)
+        }
+        val acc = if (last < 0) alive else alive.take(last + 1)
+        Option.when(acc.length > 1)(partition -> acc)
+      }
 
   val pathSafeHostname: String = {
     val host = try java.net.InetAddress.getLocalHost.getHostName

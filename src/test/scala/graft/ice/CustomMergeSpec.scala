@@ -118,4 +118,23 @@ class CustomMergeSpec extends SparkSpec {
     assert(table.read().count() == 4) // physically deduped
     assert(dedupCount() == 4)
   }
+
+  test("merge() with custom merge SQL leaves no source_files view behind") {
+    // streaming sinks and the HTTP API call merge() on every micro-batch /
+    // timer tick: one leaked temp view per call grows the session catalog
+    // without bound
+    val cfg = IceTableConfig(
+      partitionExpr = concat(lit("u="), col("user_id")),
+      sortOrder = Seq("ts"),
+      customMergeSql = Some(
+        """select user_id, max_by(event, ts) as event, max(ts) as ts
+          |from source_files group by user_id""".stripMargin))
+    val table = new IceTable(spark, tmpDir("merge_views"), cfg)
+    (0 until 3).foreach { _ => table.insert(eventsV1); table.insert(eventsV2) }
+    val merged = Iterator.continually(table.merge()).takeWhile(_.isDefined).length
+    assert(merged >= 3)
+    val leaked = spark.catalog.listTables().collect().map(_.name)
+      .filter(_.startsWith("source_files_"))
+    assert(leaked.isEmpty, s"leaked temp views: ${leaked.mkString(", ")}")
+  }
 }
