@@ -144,12 +144,10 @@ object DeleteVectors {
       val targets = snap.aliveFiles.filter(m => affectedPaths(m.path))
       if (targets.isEmpty) return 0
       val newFiles: Seq[FileMarker] = IceTable.onInsertPool(targets) { m =>
-        val kept = main.spark.read.schema(snap.schema.toStructType)
-          .parquet(s"${main.root}/${m.path}")
-          .withColumn("_dv_row", col("_metadata.row_index"))
-          .join(broadcast(deletes.where(col("path") === m.path)
-            .select(col("row_index").as("_dv_row"))), Seq("_dv_row"), "left_anti")
-          .drop("_dv_row")
+        val kept = main.dropDeleted(
+          main.scanMarkers(snap.schema.toStructType, Seq(m)), lit(m.path),
+          Some(broadcast(deletes.where(col("path") === m.path)
+            .select(col("path").as("_dv_path"), col("row_index").as("_dv_row")))))
         main.writeSingleFileFor(kept, main.partitionOf(m.path))
       }
       try {

@@ -63,11 +63,14 @@ final case class CleanupResult(
   * @param statsColumn beyond-reference data skipping: record each written
   *   file's [min, max] of this column (typically the leading sort key) in
   *   its log marker, read once from the parquet footer at write time.
-  *   [[IceTable.filesInStatsRange]] / [[IceTable.readStatsRange]] then
+  *   `read().where(...)` on it (and [[IceTable.filesInStatsRange]]) then
   *   prune files from the log alone — at 100 TB a range query on the
   *   cluster key plans with ZERO object-store reads instead of listing
   *   and footer-probing 10⁵ files. Stats-less markers (older writers)
-  *   are conservatively kept.
+  *   are conservatively kept. Scans prune on integral, floating and
+  *   string columns only: a DECIMAL's footer stats are its unscaled
+  *   integer and a DATE's its day number, so those record but never
+  *   prune a scan.
   * @param statsColumns ADDITIONAL stats columns beyond `statsColumn` (all
   *   read from the same one footer pass at write time; recorded in the
   *   marker's `stm` field). With Z-order clustering
@@ -126,7 +129,7 @@ final case class IceTableConfig(
     customInsertSql: Option[String] = None,
     customMergeSql: Option[String] = None,
     compressionCodec: String = "snappy",
-    parquetBlockBytes: Long = 128L * 1024 * 1024,
+    parquetBlockBytes: Long = IceTable.BlockBytes,
     preservePartition: Boolean = false,
     shuffleOnInsert: Boolean = true,
     formatRow: Option[DataFrame => DataFrame] = None,
@@ -404,30 +407,18 @@ final class IceTable(
     scanMarkers(snap.schema.toStructType, markers)
 
   /** Plan a parquet scan over an EXPLICIT marker list with ZERO file
-    * listing: paths and exact sizes come from the log markers (recorded
-    * from `getFileStatus` at commit — the contract the catalog relation
-    * already trusts), so neither a LIST/stat round-trip nor
-    * DataFrameReader's distributed listing job ever runs. That job costs
-    * one task PER FILE past 32 paths, each re-deserializing the full
-    * Hadoop conf (~15-20 ms CPU/file measured — an 83-task job ahead of
-    * EVERY lineitem-fixture query, 2000 tasks ≈ 35 CPU-s ahead of the
-    * 2000-file compaction read). Semantics match
-    * `spark.read.schema(schema).parquet(paths: _*)`: same data schema (no
-    * partition columns appended), same pushdown/pruning, same `_metadata`
-    * columns — only the listing is gone. */
+    * listing, through the same [[graft.plans.IceFileIndex]] as the
+    * catalog relation (see there for what the listing would cost).
+    * Semantics match `spark.read.schema(schema).parquet(paths: _*)`: same
+    * data schema (no partition columns appended), same pushdown, same
+    * `_metadata` columns — plus the index's stats-window file skipping.
+    * Deletion-vector-blind; see [[dropDeleted]]. */
   private[graft] def scanMarkers(
       schema: StructType, markers: Seq[FileMarker]): DataFrame =
     if (markers.isEmpty)
       spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-    else spark.baseRelationToDataFrame(
-      org.apache.spark.sql.execution.datasources.HadoopFsRelation(
-        location = new graft.plans.MarkerFileIndex(qualifiedRoot, markers),
-        partitionSchema = StructType(Nil),
-        dataSchema = schema,
-        bucketSpec = None,
-        fileFormat =
-          new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat,
-        options = Map.empty)(spark))
+    else spark.baseRelationToDataFrame(graft.plans.IceFileIndex.hadoopRelation(
+      spark, new graft.plans.IceFileIndex(this, markers, schema, StructType(Nil))))
 
   /** This table's root as the filesystem qualifies it — the exact prefix
     * `_metadata.file_path` carries for every file under the root. */
@@ -451,14 +442,9 @@ final class IceTable(
     * exists or it is empty. One cheap `_dv/_log` existence probe; see
     * [[DeleteVectors]]. */
   private[graft] def dvPositions(
-      paths: Seq[String], maxTs: Long = Long.MaxValue): Option[DataFrame] = {
-    val dvRoot = s"$root/_dv"
-    val probe = new Path(dvRoot, "_log")
-    val hasDv =
-      try probe.getFileSystem(hadoopConf).exists(probe)
-      catch { case _: Exception => false }
-    if (!hasDv) return None
-    val dv = new IceTable(spark, dvRoot, DeleteVectors.dvConfig, clock)
+      paths: Seq[String], maxTs: Long): Option[DataFrame] = {
+    if (!hasDvTable) return None
+    val dv = new IceTable(spark, s"$root/_dv", DeleteVectors.dvConfig, clock)
     dv.trySnapshot(maxTs)
       .filter(_.aliveFiles.nonEmpty)
       .map { s =>
@@ -472,14 +458,30 @@ final class IceTable(
       }
   }
 
-  /** Fingerprint of the dv side table's commit state (None = no dv table).
-    * A rewrite captures this BEFORE reading any data; [[validatedRewriteCommit]]
-    * re-computes it under the commit lock and aborts on mismatch — so a
-    * [[DeleteVectors.deleteWhere]] that commits between a rewrite's data
-    * job and its commit can never be silently dropped (the rewrite's
-    * output was computed against the older dv state, and its tombstones
-    * would strand the fresh marks on dead paths). Driver-side metadata
-    * work only: one existence probe + one log listing. */
+  /** The one `_dv/_log` existence probe: whether this table has a
+    * deletion-vector side table. A failed probe reads as "no". */
+  private def hasDvTable: Boolean = {
+    val probe = new Path(s"$root/_dv", "_log")
+    try probe.getFileSystem(hadoopConf).exists(probe)
+    catch { case _: Exception => false }
+  }
+
+  /** LEFT ANTI-join `df`, a scan of this table's files, against deleted
+    * positions `del` (from [[dvPositions]]; `df` unchanged when None).
+    * `path` is each row's root-relative file path: [[relPathCol]], or a
+    * literal for a single-file scan; the row position is
+    * `_metadata.row_index`, so `df` must still expose the scan's metadata
+    * columns. The dv side is position-pair sized, so AQE broadcasts it on
+    * its own — and a pathological dv may still sort-merge instead of
+    * OOMing. */
+  private[graft] def dropDeleted(
+      df: DataFrame, path: Column, del: Option[DataFrame]): DataFrame =
+    del.fold(df)(d => df
+      .withColumn("_dv_path", path)
+      .withColumn("_dv_row", col("_metadata.row_index"))
+      .join(d, Seq("_dv_path", "_dv_row"), "left_anti")
+      .drop("_dv_path", "_dv_row"))
+
   /** Monotone version of this table's FULL commit state: the max
     * filename ts across the main log AND the deletion-vector side log.
     * A merge-on-read delete commits only to `_dv`, so a main-log-only
@@ -511,18 +513,20 @@ final class IceTable(
     main ++ dvl
   }
 
-  private[ice] def dvStamp(): Option[String] = {
-    val dvRoot = s"$root/_dv"
-    val probe = new Path(dvRoot, "_log")
-    val hasDv =
-      try probe.getFileSystem(hadoopConf).exists(probe)
-      catch { case _: Exception => false }
-    if (!hasDv) None
+  /** Fingerprint of the dv side table's commit state (None = no dv table).
+    * A rewrite captures this BEFORE reading any data; [[validatedRewriteCommit]]
+    * re-computes it under the commit lock and aborts on mismatch — so a
+    * [[DeleteVectors.deleteWhere]] that commits between a rewrite's data
+    * job and its commit can never be silently dropped (the rewrite's
+    * output was computed against the older dv state, and its tombstones
+    * would strand the fresh marks on dead paths). Driver-side metadata
+    * work only: one existence probe + one log listing. */
+  private[ice] def dvStamp(): Option[String] =
+    if (!hasDvTable) None
     else {
-      val logs = logio.currentLogFiles(dvRoot)
+      val logs = logio.currentLogFiles(s"$root/_dv")
       Some(s"${logs.length}:${scala.util.hashing.MurmurHash3.orderedHash(logs)}")
     }
-  }
 
   /** [[readFiles]] with this table's deletion vectors APPLIED — the read
     * every file-REWRITING operation must use: a rewrite gives surviving
@@ -535,16 +539,9 @@ final class IceTable(
   private[ice] def readFilesApplyingDeletes(
       snap: IceSnapshot, markers: Seq[FileMarker],
       maxTs: Long = Long.MaxValue): DataFrame =
-    dvPositions(markers.map(_.path), maxTs) match {
-      case None => readFiles(snap, markers)
-      case Some(del) =>
-        if (markers.isEmpty) readFiles(snap, markers)
-        else scanMarkers(snap.schema.toStructType, markers)
-          .withColumn("_dv_path", relPathCol)
-          .withColumn("_dv_row", col("_metadata.row_index"))
-          .join(del, Seq("_dv_path", "_dv_row"), "left_anti")
-          .drop("_dv_path", "_dv_row")
-    }
+    if (markers.isEmpty) readFiles(snap, markers)
+    else dropDeleted(readFiles(snap, markers), relPathCol,
+      dvPositions(markers.map(_.path), maxTs))
 
   /** A18 `get_files`: alive markers whose partition string is within the
     * lexicographic [lo, hi] range (reference: ch/user_scripts/main.go:44-73).
@@ -581,19 +578,8 @@ final class IceTable(
     * configured stats column this is the full alive list. Pure log-side
     * metadata work: no file is listed or opened.
     */
-  def filesInStatsRange(snap: IceSnapshot, lo: String, hi: String): Seq[FileMarker] = {
-    if (cfg.statsColumn.isEmpty) return snap.aliveFiles
-    val numeric = cfg.statsColumn.flatMap(c => snap.schema.pairs.toMap.get(c))
-      .exists(IceTable.statsTypeIsNumeric)
-    snap.aliveFiles.filter(_.stats.forall { case (mn, mx) =>
-      IceTable.statsIntersects(numeric, mn, mx, Some(lo), Some(hi))
-    })
-  }
-
-  def readStatsRange(lo: String, hi: String, maxTs: Long = Long.MaxValue): DataFrame = {
-    val snap = snapshot(maxTs)
-    readFilesApplyingDeletes(snap, filesInStatsRange(snap, lo, hi), maxTs)
-  }
+  def filesInStatsRange(snap: IceSnapshot, lo: String, hi: String): Seq[FileMarker] =
+    filesMatchingStats(snap, cfg.statsColumn.map(_ -> (Some(lo), Some(hi))).toMap)
 
   /** A marker's recorded [min, max] for any stats column (primary or
     * additional), or None (un-prunable on that column). */
@@ -606,29 +592,27 @@ final class IceTable(
     * semantics, like a `WHERE a BETWEEN .. AND b BETWEEN ..`). Columns a
     * marker has no stats for are conservatively kept. Pure log-side
     * metadata work — with Z-order clustering this prunes on any clustered
-    * dimension, not just the leading sort key. */
+    * dimension, not just the leading sort key. `read().where(...)` on
+    * the same windows scans exactly these files. */
   def filesMatchingStats(
       snap: IceSnapshot,
       windows: Map[String, (Option[String], Option[String])]): Seq[FileMarker] = {
     if (windows.isEmpty) return snap.aliveFiles
-    val types = snap.schema.pairs.toMap
-    val numeric = windows.keys.map(c =>
-      c -> types.get(c).exists(IceTable.statsTypeIsNumeric)).toMap
-    snap.aliveFiles.filter { m =>
-      windows.forall { case (c, (lo, hi)) =>
-        markerStats(m, c).forall { case (mn, mx) =>
-          IceTable.statsIntersects(numeric(c), mn, mx, lo, hi)
-        }
-      }
-    }
+    val schema = snap.schema.toStructType
+    snap.aliveFiles.filter(statsMatch(_, windows, IceTable.statsNumeric(schema, _)))
   }
 
-  def readMatchingStats(
+  /** The one per-file stats test, shared by [[filesMatchingStats]] and
+    * `IceFileIndex`'s scan-time skipping: `m`'s recorded [min, max] can
+    * intersect every window; `numeric` says how a column compares. */
+  private[graft] def statsMatch(m: FileMarker,
       windows: Map[String, (Option[String], Option[String])],
-      maxTs: Long = Long.MaxValue): DataFrame = {
-    val snap = snapshot(maxTs)
-    readFilesApplyingDeletes(snap, filesMatchingStats(snap, windows), maxTs)
-  }
+      numeric: String => Boolean): Boolean =
+    windows.forall { case (c, (lo, hi)) =>
+      markerStats(m, c).forall { case (mn, mx) =>
+        IceTable.statsIntersects(numeric(c), mn, mx, lo, hi)
+      }
+    }
 
   /** Incremental (CDC-style) file listing: markers committed by *insert*
     * logs whose commit timestamp is in `(sinceTs, untilTs]` — the
@@ -1361,42 +1345,9 @@ final class IceTable(
     // probe — materialize its distinct ONCE, not once per consumer
     val srcKeys = srcStaged.select(keyCols.map(col): _*).distinct().localCheckpoint()
     val snapOpt = trySnapshot(Long.MaxValue)
-    // deletion vectors apply to the probe AND the kept-row rewrites (see
-    // mutateAffected): a rewrite re-positions survivors, so unapplied
-    // marks would resurrect their rows
-    val del = snapOpt.flatMap(s => dvPositions(s.aliveFiles.map(_.path)))
-    def applyDv(df: DataFrame): DataFrame = del.fold(df)(d =>
-      df.join(d.withColumnRenamed("_dv_path", "_p").withColumnRenamed("_dv_row", "_r"),
-        Seq("_p", "_r"), "left_anti"))
-    val (targets, replaced, schema) = snapOpt match {
-      case None => (Seq.empty[FileMarker], 0L, srcStaged.schema)
-      case Some(snap) =>
-        val sch = snap.schema.toStructType
-        // the metadata columns must project off the SCAN, before any join
-        // hides them
-        val scan = applyDv(scanMarkers(sch, snap.aliveFiles)
-          .withColumn("_p", relPathCol)
-          .withColumn("_r", col("_metadata.row_index")))
-        val hits = scan.join(srcKeys, keyCols, "left_semi")
-          .groupBy(col("_p"))
-          .agg(count(lit(1)).as("_n"))
-          .collect()
-        val affected = hits.map(_.getString(0)).toSet
-        (snap.aliveFiles.filter(m => affected(m.path)),
-          hits.map(_.getLong(1)).sum, sch)
-    }
-    // per-file anti-join rewrites fan out on the bounded pool
-    val rewritten: Seq[FileMarker] = IceTable.onInsertPool(targets) { m =>
-      val kept = applyDv(scanMarkers(schema, Seq(m))
-          .withColumn("_p", lit(m.path))
-          .withColumn("_r", col("_metadata.row_index")))
-        .drop("_p", "_r")
-        .join(srcKeys, keyCols, "left_anti")
-      val out = writeSingleFileFor(kept, partitionOf(m.path))
-      // fully-emptied file: tombstone only, never an alive empty file
-      if (out.rowCount.contains(0L)) { logio.delete(root, out.path); None }
-      else Some(out)
-    }.flatten
+    val (targets, rewritten, replaced) = snapOpt
+      .fold((Seq.empty[FileMarker], Seq.empty[FileMarker], 0L))(
+        rewriteWithoutKeys(_, srcKeys, keyCols))
     // new rows go through the SAME routing pipeline as insert (formatRow,
     // `_partition` fast path, partitionFunc, custom insert SQL) — a bare
     // partitionExpr would misplace rows on tables configured with any of
@@ -1432,36 +1383,43 @@ final class IceTable(
     val dvStampAtRead = dvStamp() // BEFORE any read — see validatedRewriteCommit
     val srcKeys = source.select(keyCols.map(col): _*).distinct().localCheckpoint()
     val snap = trySnapshot(Long.MaxValue).getOrElse(return 0L)
-    if (snap.aliveFiles.isEmpty) return 0L
-    val schema = snap.schema.toStructType
-    val del = dvPositions(snap.aliveFiles.map(_.path))
-    def applyDv(df: DataFrame): DataFrame = del.fold(df)(d =>
-      df.join(d.withColumnRenamed("_dv_path", "_p").withColumnRenamed("_dv_row", "_r"),
-        Seq("_p", "_r"), "left_anti"))
-    val scan = applyDv(scanMarkers(schema, snap.aliveFiles)
-      .withColumn("_p", relPathCol)
-      .withColumn("_r", col("_metadata.row_index")))
-    val hits = scan.join(srcKeys, keyCols, "left_semi")
-      .groupBy(col("_p")).agg(count(lit(1)).as("_n"))
-      .collect() // file-count scale: one row per AFFECTED file
-    if (hits.isEmpty) return 0L
-    val deleted = hits.map(_.getLong(1)).sum
-    val affected = hits.map(_.getString(0)).toSet
-    val targets = snap.aliveFiles.filter(m => affected(m.path))
-    val rewritten: Seq[FileMarker] = IceTable.onInsertPool(targets) { m =>
-      val kept = applyDv(scanMarkers(schema, Seq(m))
-          .withColumn("_p", lit(m.path))
-          .withColumn("_r", col("_metadata.row_index")))
-        .drop("_p", "_r")
-        .join(srcKeys, keyCols, "left_anti")
-      val out = writeSingleFileFor(kept, partitionOf(m.path))
-      // fully-emptied file: tombstone only, never an alive empty file
-      if (out.rowCount.contains(0L)) { logio.delete(root, out.path); None }
-      else Some(out)
-    }.flatten
+    val (targets, rewritten, deleted) = rewriteWithoutKeys(snap, srcKeys, keyCols)
+    if (targets.isEmpty) return 0L
     validatedRewriteCommit(targets, rewritten, Seq.empty, dvStampAtRead)
     maybeCheckpoint()
     deleted
+  }
+
+  /** The key-set rewrite behind [[upsert]] and [[deleteKeys]]: probe which
+    * alive files of `snap` hold rows whose `keyCols` appear in `srcKeys`,
+    * then rewrite exactly those files without such rows, per file on the
+    * bounded pool. Deletion vectors apply to both: an already-deleted row
+    * is no match, and a rewrite re-positions survivors, so unapplied marks
+    * would resurrect their rows. A file emptied to zero rows is
+    * tombstoned with no replacement, never kept alive empty. Returns
+    * (targets, their rewrites, matched rows); the caller commits. */
+  private def rewriteWithoutKeys(snap: IceSnapshot, srcKeys: DataFrame,
+      keyCols: Seq[String]): (Seq[FileMarker], Seq[FileMarker], Long) = {
+    if (snap.aliveFiles.isEmpty) return (Nil, Nil, 0L)
+    val schema = snap.schema.toStructType
+    val del = dvPositions(snap.aliveFiles.map(_.path), Long.MaxValue)
+    // the metadata columns must project off the SCAN, before any join
+    // hides them
+    val hits = dropDeleted(scanMarkers(schema, snap.aliveFiles)
+        .withColumn("_p", relPathCol), col("_p"), del)
+      .join(srcKeys, keyCols, "left_semi")
+      .groupBy(col("_p")).agg(count(lit(1)).as("_n"))
+      .collect() // file-count scale: one row per AFFECTED file
+    val affected = hits.map(_.getString(0)).toSet
+    val targets = snap.aliveFiles.filter(m => affected(m.path))
+    val rewritten = IceTable.onInsertPool(targets) { m =>
+      val kept = dropDeleted(scanMarkers(schema, Seq(m)), lit(m.path), del)
+        .join(srcKeys, keyCols, "left_anti")
+      val out = writeSingleFileFor(kept, partitionOf(m.path))
+      if (out.rowCount.contains(0L)) { logio.delete(root, out.path); None }
+      else Some(out)
+    }.flatten
+    (targets, rewritten, hits.map(_.getLong(1)).sum)
   }
 
   /** Shared CoW row-mutation core: probe which alive files hold matching
@@ -1511,13 +1469,9 @@ final class IceTable(
     // deleted rows as matches) and each per-file rewrite (a rewrite gives
     // surviving rows new positions, so unapplied marks would go stale and
     // resurrect their rows)
-    val del = dvPositions(snap.aliveFiles.map(_.path))
-    def applyDv(df: DataFrame): DataFrame = del.fold(df)(d =>
-      df.join(d.withColumnRenamed("_dv_path", "_p").withColumnRenamed("_dv_row", "_r"),
-        Seq("_p", "_r"), "left_anti"))
-    val probed = withVirtFromPath(applyDv(scan
-      .withColumn("_p", relPathCol)
-      .withColumn("_r", col("_metadata.row_index"))))
+    val del = dvPositions(snap.aliveFiles.map(_.path), Long.MaxValue)
+    val probed = withVirtFromPath(
+      dropDeleted(scan.withColumn("_p", relPathCol), col("_p"), del))
     // one probe pass computes BOTH the per-file match count and the
     // per-file alive total: when the mutation DROPS matched rows
     // (delete), a file whose every alive row matches needs no rewrite at
@@ -1542,11 +1496,9 @@ final class IceTable(
     // caller's one-shot validation pass (e.g. updateWhere's CHECK
     // pre-flight) over the AFFECTED files only, before any rewrite
     // writes a byte
-    precheck.foreach(check => check(withVirtFromPath(applyDv(
-      scanMarkers(schema, targets)
-        .withColumn("_p", relPathCol)
-        .withColumn("_r", col("_metadata.row_index"))))
-      .drop("_p", "_r")))
+    precheck.foreach(check => check(withVirtFromPath(dropDeleted(
+      scanMarkers(schema, targets).withColumn("_p", relPathCol), col("_p"), del))
+      .drop("_p")))
     // per-file rewrites fan out on the bounded pool (leaf-only: one Spark
     // job + a rename each), like rewritePartition — serial per-file jobs
     // would make driver wall-clock linear in affected files. A rewrite
@@ -1555,10 +1507,7 @@ final class IceTable(
     // forever, padding every later scan's file list (and, on MV tables,
     // carrying the pre-narrowing union schema past a rebase).
     val newFiles: Seq[FileMarker] = IceTable.onInsertPool(rewriteTargets) { m =>
-      val src = applyDv(scanMarkers(schema, Seq(m))
-        .withColumn("_p", lit(m.path))
-        .withColumn("_r", col("_metadata.row_index")))
-        .drop("_p", "_r")
+      val src = dropDeleted(scanMarkers(schema, Seq(m)), lit(m.path), del)
       val part = partitionOf(m.path)
       val out = writeSingleFileFor(
         transform(withVirtFor(src, part)).drop(virtKeys: _*), part)
@@ -2662,6 +2611,10 @@ final class IceTable(
 
 object IceTable {
 
+  /** 128 MB: the default parquet row-group byte cap, and the block size
+    * every FileStatus the engine synthesizes reports. */
+  private[graft] val BlockBytes: Long = 128L * 1024 * 1024
+
   /** Parse a partition directory string into its `k=v` map — THE value
     * semantics every surface must share (the catalog scan's partition
     * columns, predicate-based drops, the CoW mutation core's virtual
@@ -2744,7 +2697,7 @@ object IceTable {
     if (cfg.bloomFilterColumns.nonEmpty) m("blc") = cfg.bloomFilterColumns
     cfg.bloomFilterNdv.foreach(v => m("bln") = v)
     if (cfg.compressionCodec != "snappy") m("cdc") = cfg.compressionCodec
-    if (cfg.parquetBlockBytes != 128L * 1024 * 1024) m("pbb") = cfg.parquetBlockBytes
+    if (cfg.parquetBlockBytes != BlockBytes) m("pbb") = cfg.parquetBlockBytes
     if (cfg.preservePartition) m("pp") = true
     if (!cfg.shuffleOnInsert) m("shf") = false
     if (cfg.sortOnMerge) m("som") = true
@@ -2774,7 +2727,7 @@ object IceTable {
       customMergeSql = m.get("mrg").map(_.toString),
       compressionCodec = m.get("cdc").map(_.toString).getOrElse("snappy"),
       parquetBlockBytes = m.get("pbb").map(_.asInstanceOf[Long])
-        .getOrElse(128L * 1024 * 1024),
+        .getOrElse(BlockBytes),
       preservePartition = m.get("pp").contains(true),
       shuffleOnInsert = !m.get("shf").contains(false),
       formatRow =
@@ -2889,9 +2842,10 @@ object IceTable {
     read
   }
 
-  private[graft] def statsTypeIsNumeric(t: String): Boolean =
-    Set("BIGINT", "INTEGER", "SMALLINT", "TINYINT", "DOUBLE", "FLOAT")
-      .contains(t) || t.startsWith("DECIMAL")
+  /** Stats on `column` compare numerically iff `schema` types it numeric. */
+  private[graft] def statsNumeric(schema: StructType, column: String): Boolean =
+    schema.fields.exists(f =>
+      f.name == column && f.dataType.isInstanceOf[org.apache.spark.sql.types.NumericType])
 
   /** The one stats comparator. Numeric values compare as BigDecimal;
     * strings compare as UNSIGNED UTF-8 BYTES — the order parquet's binary
@@ -2909,9 +2863,8 @@ object IceTable {
         b.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
     catch { case _: NumberFormatException => None }
 
-  /** Shared stats-interval test for [[IceTable.filesInStatsRange]] and the
-    * optimizer-side skipping in `IceFileIndex`. An unparseable value keeps
-    * the file — skipping must never produce a false negative. */
+  /** Stats-interval test behind [[IceTable.statsMatch]]. An unparseable
+    * value keeps the file — skipping must never produce a false negative. */
   private[graft] def statsIntersects(
       numeric: Boolean,
       min: String, max: String,

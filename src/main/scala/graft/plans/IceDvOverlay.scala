@@ -5,7 +5,6 @@ import org.apache.spark.sql.graft.PlanBridge
 import org.apache.spark.sql.catalyst.expressions.Alias
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.catalyst.trees.TreeNodeTag
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
 /** Analyzer rule closing the last deletion-vector-blind read surface:
@@ -16,27 +15,35 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   * (`IceTable.read`, the `graft.` SQL catalog, temp views, and
   * `format("ice")`) agree after a [[graft.ice.DeleteVectors.deleteWhere]].
   *
-  * Relations built by [[IceFileIndex.dataFrame]] apply the overlay
-  * themselves and arrive tagged [[IceDvOverlay.DvApplied]], so the rule
-  * never stacks a second anti-join; the subtree this rule produces embeds
-  * the same (now-tagged) relation node, so the fixed-point analyzer batch
-  * terminates after one application. Output attribute ids are preserved
-  * via an aliasing Project, so parent operators resolve untouched.
-  * No-dv tables pay one `_dv/_log` existence probe per resolution. */
+  * The rule fires only on an index that is [[IceFileIndex.dvPending]]:
+  * [[IceFileIndex.dataFrame]] applies the overlay itself and explicit
+  * marker lists stay deletion-vector-blind, so neither is ever pending.
+  * The subtree this rule produces swaps in the same relation over
+  * [[IceFileIndex.dvApplied]], so the fixed-point analyzer batch
+  * terminates after one application — and because the mark is the index,
+  * a plan copy (self-join deduplication included) keeps it. Output
+  * attribute ids are preserved via an aliasing Project, so parent
+  * operators resolve untouched. No-dv tables pay one `_dv/_log` existence
+  * probe per resolution. */
 final class IceDvOverlay(spark: SparkSession) extends Rule[LogicalPlan] {
 
-  import IceDvOverlay.DvApplied
+  private def pending(lr: LogicalRelation): Option[(HadoopFsRelation, IceFileIndex)] =
+    lr.relation match {
+      case h: HadoopFsRelation => h.location match {
+        case ix: IceFileIndex if ix.dvPending => Some(h -> ix)
+        case _ => None
+      }
+      case _ => None
+    }
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.resolveOperators {
-    case lr: LogicalRelation if lr.getTagValue(DvApplied).isEmpty &&
-        lr.relation.isInstanceOf[HadoopFsRelation] &&
-        lr.relation.asInstanceOf[HadoopFsRelation].location.isInstanceOf[IceFileIndex] =>
-      lr.setTagValue(DvApplied, true)
-      val idx = lr.relation.asInstanceOf[HadoopFsRelation]
-        .location.asInstanceOf[IceFileIndex]
-      val base = PlanBridge.ofRows(spark, lr)
-      val overlaid = IceFileIndex.overlayDeletes(idx.table, idx.snap, base)
-      if (overlaid eq base) lr // no dv table: keep the bare relation
+    case lr: LogicalRelation => pending(lr).fold[LogicalPlan](lr) { case (h, ix) =>
+      val applied = lr.copy(relation = h.copy(location = ix.dvApplied)(h.sparkSession))
+      val t = ix.table
+      val base = PlanBridge.ofRows(spark, applied)
+      val overlaid = t.dropDeleted(base, t.relPathCol,
+        t.dvPositions(ix.markers.map(_.path), ix.pinned.fold(Long.MaxValue)(_.timestamp)))
+      if (overlaid eq base) applied // no dv table: keep the bare relation
       else {
         val analyzed = overlaid.queryExecution.analyzed
         val byName = analyzed.output.map(a => a.name -> a).toMap
@@ -46,11 +53,6 @@ final class IceDvOverlay(spark: SparkSession) extends Rule[LogicalPlan] {
             explicitMetadata = Some(a.metadata))
         }, analyzed)
       }
+    }
   }
-}
-
-object IceDvOverlay {
-  /** Marks a relation whose deletion vectors are already applied (or
-    * verified absent) — the rule skips tagged nodes. */
-  val DvApplied: TreeNodeTag[Boolean] = TreeNodeTag[Boolean]("graft.dvApplied")
 }

@@ -4,53 +4,80 @@ import graft.ice.{FileMarker, IceSnapshot, IceTable}
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.catalog.BucketSpec
 import org.apache.spark.sql.catalyst.expressions.{Attribute, BoundReference, Cast, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual, Literal, Predicate}
 import org.apache.spark.sql.execution.datasources.{FileIndex, FileStatusWithMetadata, HadoopFsRelation, PartitionDirectory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.types.{NumericType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{ByteType, DataType, DecimalType, DoubleType, FloatType, IntegerType, LongType, ShortType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** A Catalyst [[FileIndex]] backed by an ice snapshot: the table becomes a
-  * first-class catalog relation whose Hive-style partition keys (parsed
-  * from `_data/{k=v/...}/uuid.parquet` marker paths) are *real queryable
-  * columns*, and `WHERE` clauses on them prune files inside the optimizer
-  * (`PartitionFilters` in the plan) — no files are even listed for pruned
-  * partitions. This is the catalog-integrated complement to
-  * `IceTable.readPartitionRange` (A18) and subsumes the reference's
-  * `get_files` UDF / parameterized-view integrations
-  * (ch/user_scripts/main.go:44-73, examples/segment-webhook-sink.py:84-90 —
-  * B21/B22): instead of splicing file lists into SQL text, the resolver IS
-  * the table.
+/** The one Catalyst [[FileIndex]] behind every scan of an ice table: a
+  * given marker list, planned straight from the log. Paths and exact sizes
+  * come from the markers (recorded from `getFileStatus` at commit), so
+  * planning lists nothing — no LIST/HEAD round-trip, and no
+  * DataFrameReader listing job (past
+  * `spark.sql.sources.parallelPartitionDiscovery.threshold`, default 32
+  * paths, that job runs one task per path, each re-deserializing the full
+  * Hadoop conf: measured 15-20 ms CPU per file, an 83-task job ahead of
+  * every query on the 83-partition lineitem fixture).
   *
-  * The snapshot is pinned at construction — MVCC isolation holds for the
-  * lifetime of the DataFrame, exactly like the explicit-file-list path.
-  */
+  * Two constructions:
+  *  - a CATALOG scan ([[IceFileIndex.relation]], [[IceFileIndex.dataFrame]])
+  *    over a `pinned` snapshot's alive files. Hive-style partition keys
+  *    parsed from `_data/{k=v/...}/uuid.parquet` paths are real queryable
+  *    string columns, and `WHERE` clauses on them prune in the optimizer
+  *    (`PartitionFilters` in the plan). The pinned snapshot also answers
+  *    metadata-only aggregates ([[metadataRowCount]], [[metadataMinMax]]).
+  *    This subsumes the reference's `get_files` UDF / parameterized-view
+  *    integrations (ch/user_scripts/main.go:44-73,
+  *    examples/segment-webhook-sink.py:84-90 — B21/B22): instead of
+  *    splicing file lists into SQL text, the resolver IS the table.
+  *  - an EXPLICIT list ([[graft.ice.IceTable.scanMarkers]]): any markers
+  *    under a given data schema, no partition columns, no snapshot — the
+  *    `spark.read.schema(s).parquet(paths: _*)` contract minus the
+  *    listing. It is deletion-vector-blind: `IceTable.read` and the
+  *    rewrites apply the marks themselves (`IceTable.dropDeleted`), while
+  *    the `_dv` side table, the change feed and the copy-on-write probes
+  *    need the raw rows and their `_metadata` positions.
+  *
+  * Both prune the same way: partition filters, then per-file stats
+  * windows from the pushed data filters. `dvPending` marks a relation
+  * whose deletion vectors the [[IceDvOverlay]] rule still has to apply
+  * (only `format("ice")`'s); it lives on the index, not on a plan-node
+  * tag, so it survives every plan copy. */
 final class IceFileIndex(
-    spark: SparkSession,
     val table: IceTable,
-    val snap: IceSnapshot,
-    val partitionSchema: StructType) extends FileIndex {
+    val markers: Seq[FileMarker],
+    val dataSchema: StructType,
+    override val partitionSchema: StructType,
+    val pinned: Option[IceSnapshot] = None,
+    val dvPending: Boolean = false) extends FileIndex {
 
-  /** partition string → (values row, markers + file statuses), built once
-    * driver-side from the marker list (metadata-scale: no FS listing). */
-  private lazy val partitions: Seq[(InternalRow, Seq[(FileMarker, FileStatus)])] = {
-    snap.aliveFiles
+  /** Partition directories with their markers, index-aligned with the
+    * directory's files; built once driver-side from the markers. Without
+    * partition columns the whole list is ONE directory, never regrouped. */
+  private lazy val partitions: Seq[(PartitionDirectory, Seq[FileMarker])] = {
+    // Paths are FS-QUALIFIED (scheme + authority) so `_metadata.file_path`
+    // carries the prefix `IceTable.relPathCol` strips off
+    def dir(row: InternalRow, ms: Seq[FileMarker]) = PartitionDirectory(row,
+      ms.map(m => FileStatusWithMetadata(new FileStatus(
+        m.fileBytes, false, 1, IceTable.BlockBytes, m.createdMs,
+        new Path(table.qualifiedRoot + "/" + m.path))))) -> ms
+    if (partitionSchema.isEmpty) Seq(dir(InternalRow.empty, markers))
+    else markers
       .groupBy(m => table.partitionOf(m.path))
       .toSeq.sortBy(_._1)
-      .map { case (part, markers) =>
+      .map { case (part, ms) =>
         val kv = IceTable.partitionKvOf(part) // THE shared k=v semantics
-        val row = InternalRow.fromSeq(partitionSchema.map(f =>
-          UTF8String.fromString(kv.getOrElse(f.name, ""))))
-        // sizes come from the log markers — no S3 HEAD/LIST needed.
-        // Paths are FS-QUALIFIED (scheme + authority) so `_metadata
-        // .file_path` carries the same prefix as every other scan — the
-        // deletion-vector overlay strips `table.qualifiedRoot` off it
-        val files = markers.map(m => m -> new FileStatus(
-          m.fileBytes, false, 1, 128L * 1024 * 1024, m.createdMs,
-          new Path(table.qualifiedRoot + "/" + m.path)))
-        (row, files)
+        dir(InternalRow.fromSeq(partitionSchema.map(f =>
+          UTF8String.fromString(kv.getOrElse(f.name, "")))), ms)
       }
   }
+
+  /** This relation with its deletion vectors applied: the same files,
+    * no longer `dvPending`. */
+  private[plans] def dvApplied: IceFileIndex =
+    new IceFileIndex(table, markers, dataSchema, partitionSchema, pinned)
 
   // ------------------------------------------------- stats-based skipping
   //
@@ -58,37 +85,44 @@ final class IceFileIndex(
   // dataFilters; when the table records log-side [min, max] stats for a
   // column, simple comparisons against it turn into a conservative
   // [lo, hi] window and files whose stats interval cannot intersect it are
-  // never listed — the SQL-path twin of IceTable.readStatsRange, still
-  // with zero plan-time object-store reads.
+  // never listed — `t.read().where(...)` and the SQL catalog alike, with
+  // the same per-file test as IceTable.filesMatchingStats and zero
+  // plan-time object-store reads.
 
   private val statsCols: Seq[String] =
     (table.cfg.statsColumn.toSeq ++ table.cfg.statsColumns).distinct
-  private val statsNumeric: Map[String, Boolean] = {
-    val types = snap.schema.pairs.toMap
-    statsCols.map(c =>
-      c -> types.get(c).exists(IceTable.statsTypeIsNumeric)).toMap
-  }
+  /** The stats columns scans prune on, and whether each compares
+    * numerically. Only integral, floating and string columns qualify: their
+    * footer stats are the values a filter literal holds. A DECIMAL's stats
+    * are its unscaled integer (1.00 records "100") and a DATE's its day
+    * number, so comparing either against a literal would skip files that
+    * hold matching rows; such columns never prune. */
+  private val statsNumeric: Map[String, Boolean] =
+    statsCols.flatMap(c => dataSchema.find(_.name == c).map(_.dataType).collect {
+      case ByteType | ShortType | IntegerType | LongType | FloatType | DoubleType =>
+        c -> true
+      case StringType => c -> false
+    }).toMap
 
   /** Conservative per-column [lo, hi] windows for every stats column, from
     * conjunctive comparison filters; anything unrecognized just widens.
     *
     * A comparison only qualifies when it is against the bare attribute, or
-    * against a numeric→numeric cast of it on a numeric stats column (the
-    * widening casts Spark inserts for type coercion — order-preserving, and
-    * the cast literal still compares correctly as BigDecimal against the
-    * raw stats). Any other cast (e.g. a string column implicitly cast to
-    * DOUBLE by `WHERE k > 5`) moves the literal into a different ordering
-    * domain than the recorded stats, so pruning on it would be wrong —
-    * those filters are ignored. */
+    * against an EXACT numeric cast of it (the widening casts Spark inserts
+    * for type coercion, e.g. INT to DECIMAL(11,1) for `k < 1.5`): every
+    * value keeps its order and magnitude, so the cast literal compares
+    * correctly as BigDecimal against the raw stats. Casts that round,
+    * truncate or wrap (BIGINT to DOUBLE past 2^53, DOUBLE to INT, BIGINT
+    * to INT) and casts out of a string column move the literal into a
+    * different domain than the recorded stats — those filters are
+    * ignored. */
   private def statsWindows(
       dataFilters: Seq[Expression]): Map[String, (Option[String], Option[String])] = {
-    if (statsCols.isEmpty) return Map.empty
+    if (statsNumeric.isEmpty) return Map.empty
     def colOf(e: Expression): Option[String] = e match {
       case a: Attribute if statsNumeric.contains(a.name) => Some(a.name)
-      case Cast(child, dt, _, _)
-          if dt.isInstanceOf[NumericType] &&
-            child.dataType.isInstanceOf[NumericType] =>
-        colOf(child).filter(statsNumeric(_)) // numeric→numeric widening only
+      case Cast(child, dt, _, _) if IceFileIndex.exactCast(child.dataType, dt) =>
+        colOf(child)
       case _ => None
     }
     def litStr(l: Literal): Option[String] =
@@ -163,16 +197,8 @@ final class IceFileIndex(
     (lo.keySet ++ hi.keySet).map(c => c -> (lo.get(c), hi.get(c))).toMap
   }
 
-  private def statsKeep(
-      m: FileMarker,
-      windows: Map[String, (Option[String], Option[String])]): Boolean =
-    windows.forall { case (c, (lo, hi)) =>
-      table.markerStats(m, c).forall { case (mn, mx) =>
-        IceTable.statsIntersects(statsNumeric(c), mn, mx, lo, hi)
-      }
-    }
-
-  override def rootPaths: Seq[Path] = Seq(new Path(table.root))
+  override def rootPaths: Seq[Path] =
+    Seq(new Path(if (pinned.isDefined) table.root else table.qualifiedRoot))
 
   override def listFiles(
       partitionFilters: Seq[Expression],
@@ -186,50 +212,45 @@ final class IceFileIndex(
       })
       val predicate = Predicate.create(bound.reduce(
         org.apache.spark.sql.catalyst.expressions.And))
-      partitions.filter { case (row, _) => predicate.eval(row) }
+      partitions.filter { case (dir, _) => predicate.eval(dir.values) }
     }
     val windows = statsWindows(dataFilters)
-    pruned.map { case (row, files) =>
-      val kept =
-        if (windows.isEmpty) files
-        else files.filter { case (m, _) => statsKeep(m, windows) }
-      PartitionDirectory(row, kept.map(f => FileStatusWithMetadata(f._2)))
+    if (windows.isEmpty) pruned.map(_._1)
+    else pruned.map { case (dir, ms) =>
+      dir.copy(files = dir.files.zip(ms).collect {
+        case (f, m) if table.statsMatch(m, windows, statsNumeric) => f
+      })
     }
   }
 
   override def inputFiles: Array[String] =
-    snap.aliveFiles.map(m => s"${table.root}/${m.path}").toArray
+    markers.map(m => s"${table.qualifiedRoot}/${m.path}").toArray
 
   override def refresh(): Unit = ()
 
-  override def sizeInBytes: Long = snap.aliveFiles.map(_.fileBytes).sum
+  override def sizeInBytes: Long = markers.map(_.fileBytes).sum
 
   /** Sum of the alive files' recorded physical row counts, defined only
-    * when EVERY alive marker carries one — the metadata-only `count(*)`
-    * input ([[org.apache.spark.sql.graft.MetadataOnlyCount]]). A single
-    * rc-less file (reference-written log, pre-field history) disables
-    * the fast path rather than corrupting it; an empty snapshot is a
-    * legitimate zero. */
-  def metadataRowCount: Option[Long] = {
-    val fs = snap.aliveFiles
-    if (fs.forall(_.rowCount.isDefined)) Some(fs.iterator.flatMap(_.rowCount).sum)
-    else None
-  }
+    * for a pinned snapshot scan whose EVERY alive marker carries one — the
+    * metadata-only `count(*)` input
+    * ([[org.apache.spark.sql.graft.MetadataOnlyCount]]). A single rc-less
+    * file (reference-written log, pre-field history) disables the fast
+    * path rather than corrupting it; an empty snapshot is a legitimate
+    * zero. An explicit list always scans. */
+  def metadataRowCount: Option[Long] =
+    if (pinned.isEmpty || !markers.forall(_.rowCount.isDefined)) None
+    else Some(markers.iterator.flatMap(_.rowCount).sum)
 
-  /** Numeric-compared (min, max) of `colName` across the alive files'
-    * footer stats markers, defined iff EVERY alive file records stats for
-    * that column (a file whose rows are all-null there records none —
-    * blocking is the conservative, correct answer; footer min/max skip
-    * nulls exactly like SQL `min`/`max`). Values returned as the stored
-    * strings; the caller owns typed reconstruction. Empty snapshot →
-    * None (SQL yields NULL there — let the scan say so). */
+  /** Numeric-compared (min, max) of `colName` across a pinned snapshot's
+    * alive files' footer stats markers, defined iff EVERY alive file
+    * records stats for that column (a file whose rows are all-null there
+    * records none — blocking is the conservative, correct answer; footer
+    * min/max skip nulls exactly like SQL `min`/`max`). Values returned as
+    * the stored strings; the caller owns typed reconstruction. Empty
+    * snapshot or explicit list → None (let the scan say so). */
   def metadataMinMax(colName: String): Option[(String, String)] = {
-    val fs = snap.aliveFiles
-    if (fs.isEmpty) return None
-    def statOf(m: graft.ice.FileMarker): Option[(String, String)] =
-      if (table.cfg.statsColumn.contains(colName)) m.stats
-      else m.multiStats.get(colName)
-    val all = fs.map(statOf)
+    if (pinned.isEmpty || markers.isEmpty) return None
+    val all = markers.map(table.markerStats(_, colName))
     if (all.exists(_.isEmpty)) return None
     try {
       val parsed = all.flatten.map { case (mn, mx) =>
@@ -240,47 +261,27 @@ final class IceFileIndex(
   }
 }
 
-/** Zero-listing [[FileIndex]] over an EXPLICIT marker list: the planner
-  * twin of `spark.read.schema(s).parquet(paths: _*)` minus the listing.
-  * DataFrameReader resolves a multi-path read through InMemoryFileIndex,
-  * which above `spark.sql.sources.parallelPartitionDiscovery.threshold`
-  * (default 32) paths runs a DISTRIBUTED listing job with one task per
-  * path — and every one of those tasks re-deserializes the full Hadoop
-  * Configuration from the task binary (gzip-per-entry: measured 15-20 ms
-  * CPU per task, ~35 CPU-s ahead of a 2000-file compaction scan, an
-  * 83-task job ahead of every query on the 83-partition lineitem
-  * fixture). The log already records every path and exact byte size at
-  * commit time (`FileMarker.fileBytes` = `getFileStatus(dest).getLen`),
-  * so the listing discovers nothing — this index serves the plan straight
-  * from the markers, the same trust [[IceFileIndex]] (the catalog
-  * relation) has always placed in them. At object-store scale the same
-  * construction replaces per-file HEAD/LIST round-trips with zero I/O.
-  *
-  * No partition columns: the relation's schema is exactly the passed
-  * dataSchema, matching the explicit-file-list read contract
-  * ([[graft.ice.IceTable.readFiles]]); partition values stay derivable
-  * from the path. Deliberately NOT an [[IceFileIndex]] subclass: the
-  * [[IceDvOverlay]] rule keys on that type, and explicit-list readers
-  * apply deletion vectors themselves. */
-final class MarkerFileIndex(
-    qualifiedRoot: String,
-    markers: Seq[FileMarker]) extends FileIndex {
-  private lazy val dir = PartitionDirectory(InternalRow.empty,
-    markers.map(m => FileStatusWithMetadata(new FileStatus(
-      m.fileBytes, false, 1, 128L * 1024 * 1024, m.createdMs,
-      new Path(qualifiedRoot + "/" + m.path)))))
-  override def rootPaths: Seq[Path] = Seq(new Path(qualifiedRoot))
-  override def listFiles(
-      partitionFilters: Seq[Expression],
-      dataFilters: Seq[Expression]): Seq[PartitionDirectory] = Seq(dir)
-  override def inputFiles: Array[String] =
-    markers.map(m => s"$qualifiedRoot/${m.path}").toArray
-  override def refresh(): Unit = ()
-  override def sizeInBytes: Long = markers.map(_.fileBytes).sum
-  override def partitionSchema: StructType = StructType(Nil)
-}
-
 object IceFileIndex {
+
+  /** Whether CAST(`from` AS `to`) maps every value of `from` to the same
+    * number: integral widening, integral to a DECIMAL with room for all
+    * its digits, and the exact floating widenings. */
+  private[plans] def exactCast(from: DataType, to: DataType): Boolean = {
+    def digits(t: DataType): Option[Int] = t match {
+      case ByteType => Some(3)
+      case ShortType => Some(5)
+      case IntegerType => Some(10)
+      case LongType => Some(19)
+      case _ => None
+    }
+    (from, to) match {
+      case (_, d: DecimalType) => digits(from).exists(_ <= d.precision - d.scale)
+      case (ByteType | ShortType | IntegerType, DoubleType) => true
+      case (ByteType | ShortType, FloatType) => true
+      case (FloatType, DoubleType) => true
+      case _ => digits(from).exists(f => digits(to).exists(f <= _))
+    }
+  }
 
   /** Partition keys present in a snapshot's marker paths, in first-seen
     * order (all typed string — the partition path is a string codec). */
@@ -301,29 +302,35 @@ object IceFileIndex {
 
   /** Snapshot → the catalog-grade [[HadoopFsRelation]] (partition columns
     * queryable, optimizer-side file pruning, zero plan-time object-store
-    * reads). Also the batch half of the `format("ice")` reader
+    * reads): the batch half of the `format("ice")` reader
     * ([[graft.streaming.IceStreamProvider]] returns it from
-    * `createRelation`). */
+    * `createRelation`). A `BaseRelation` cannot carry a join, so its
+    * deletion vectors are left to the [[IceDvOverlay]] rule. */
   def relation(spark: SparkSession, table: IceTable,
       maxTs: Long = Long.MaxValue): HadoopFsRelation =
-    relationFor(spark, table, table.snapshot(maxTs))
+    relationFor(spark, table, table.snapshot(maxTs), dvPending = true)
 
-  /** [[relation]] over an already-pinned snapshot. */
-  def relationFor(spark: SparkSession, table: IceTable,
-      snap: IceSnapshot): HadoopFsRelation = {
+  private def relationFor(spark: SparkSession, table: IceTable,
+      snap: IceSnapshot, dvPending: Boolean): HadoopFsRelation = {
     val pSchema = StructType(partitionKeys(table, snap)
       .map(StructField(_, StringType, nullable = true)))
-    val index = new IceFileIndex(spark, table, snap, pSchema)
+    // co-located joins/aggs on the bucket columns plan WITHOUT an
+    // exchange when the table is bucketed (see IceTableConfig.bucketBy)
+    hadoopRelation(spark, new IceFileIndex(table, snap.aliveFiles,
+      snap.schema.toStructType, pSchema, Some(snap), dvPending),
+      table.bucketSpecFor(snap))
+  }
+
+  /** The parquet [[HadoopFsRelation]] serving `index`. */
+  private[graft] def hadoopRelation(spark: SparkSession, index: IceFileIndex,
+      bucketSpec: Option[BucketSpec] = None): HadoopFsRelation =
     HadoopFsRelation(
       location = index,
-      partitionSchema = pSchema,
-      dataSchema = snap.schema.toStructType,
-      // co-located joins/aggs on the bucket columns plan WITHOUT an
-      // exchange when the table is bucketed (see IceTableConfig.bucketBy)
-      bucketSpec = table.bucketSpecFor(snap),
+      partitionSchema = index.partitionSchema,
+      dataSchema = index.dataSchema,
+      bucketSpec = bucketSpec,
       fileFormat = new ParquetFileFormat,
       options = Map.empty)(spark)
-  }
 
   /** Snapshot → catalog-grade DataFrame with queryable partition columns
     * and optimizer-side file pruning. Deletion vectors are APPLIED (same
@@ -338,7 +345,7 @@ object IceFileIndex {
     // in the SQL resolver) passes its snapshot so resolution costs ONE
     // fold, not two — only valid for the same maxTs it was folded at
     val snap = preSnap.getOrElse(table.snapshot(maxTs))
-    val rel = relationFor(spark, table, snap)
+    val rel = relationFor(spark, table, snap, dvPending = false)
     // persisted ANALYZE statistics ride the relation as catalog plan
     // stats so CBO join reordering / broadcast decisions use analyzed
     // rowCount + ndv/min/max/nullCount (inert while cbo.enabled=false:
@@ -373,33 +380,11 @@ object IceFileIndex {
           rowCount = Some(BigInt(st.rowCount)), colStats)
       case None => spark.baseRelationToDataFrame(rel)
     }
-    // baseRelationToDataFrame analyzes EAGERLY: when the session has the
-    // IceDvOverlay extension rule, the overlay is already in `df`'s
-    // analyzed plan — stacking a second anti-join here would both waste a
-    // join and fail analysis (the rule's projection hides `_metadata`).
-    // Only sessions WITHOUT the extension need the inline overlay.
-    val ruleActive = spark.sessionState.analyzer.extendedResolutionRules
-      .exists(_.isInstanceOf[IceDvOverlay])
-    if (ruleActive) df else overlayDeletes(table, snap, df)
+    // deletion vectors pinned at the snapshot's own time; the relation is
+    // not dvPending, so the IceDvOverlay rule leaves it alone
+    table.dropDeleted(df, table.relPathCol,
+      table.dvPositions(snap.aliveFiles.map(_.path), snap.timestamp))
   }
-
-  /** LEFT ANTI-join `df` (a scan of `snap`'s files) against the table's
-    * deletion-vector positions pinned at the same snapshot time; identity
-    * when no dv table exists. The dv side is position-pair sized so AQE
-    * broadcasts it on its own — and a pathological dv is still allowed to
-    * sort-merge instead of OOMing. */
-  private[plans] def overlayDeletes(
-      table: IceTable, snap: IceSnapshot, df: DataFrame): DataFrame =
-    table.dvPositions(snap.aliveFiles.map(_.path), snap.timestamp) match {
-      case None => df
-      case Some(del) =>
-        val cols = df.columns.map(org.apache.spark.sql.functions.col).toSeq
-        df.withColumn("_dv_path", table.relPathCol)
-          .withColumn("_dv_row",
-            org.apache.spark.sql.functions.col("_metadata.row_index"))
-          .join(del, Seq("_dv_path", "_dv_row"), "left_anti")
-          .select(cols: _*)
-    }
 
   /** Register the snapshot as a temp view: `spark.sql("... FROM name WHERE
     * d = '2024-01-01'")` prunes partitions in the optimizer (B21: the

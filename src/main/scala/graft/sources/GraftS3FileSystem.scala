@@ -156,7 +156,7 @@ final class GraftS3FileSystem extends FileSystem {
   }
 
   private def fileStatus(key: String, len: Long): FileStatus =
-    new FileStatus(len, false, 1, 128L * 1024 * 1024, 0L,
+    new FileStatus(len, false, 1, graft.ice.IceTable.BlockBytes, 0L,
       new Path(s"$fsUri/$key"))
 
   private def dirStatus(key: String): FileStatus =
