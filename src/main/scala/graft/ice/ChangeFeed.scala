@@ -155,9 +155,8 @@ object ChangeFeed {
       import spark.implicits._
       val pathTs = insertMarkers.toSeq
         .map { case (m, ts) => (m.path, ts) }.toDF("_cf_path", CommitTsCol)
-      parts += spark.read.schema(snap.schema.toStructType)
-        .parquet(insertMarkers.map(_._1).toSeq
-          .map(m => s"${table.root}/${m.path}"): _*)
+      parts += table.scanMarkers(snap.schema.toStructType,
+          insertMarkers.map(_._1).toSeq)
         .withColumn("_cf_path", table.relPathCol)
         .join(broadcast(pathTs), Seq("_cf_path"))
         .drop("_cf_path")

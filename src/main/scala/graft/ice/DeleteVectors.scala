@@ -51,8 +51,7 @@ object DeleteVectors {
     if (files.isEmpty) return main.readFiles(snap, files)
       .withColumn("_dv_path", lit(null).cast("string"))
       .withColumn("_dv_row", lit(null).cast("bigint"))
-    main.spark.read.schema(snap.schema.toStructType)
-      .parquet(files.map(m => s"${main.root}/${m.path}"): _*)
+    main.scanMarkers(snap.schema.toStructType, files)
       .withColumn("_dv_path", main.relPathCol)
       .withColumn("_dv_row", col("_metadata.row_index"))
   }
@@ -120,11 +119,13 @@ object DeleteVectors {
     main.read(maxTs)
 
   /** Copy-on-write materialization: rewrite ONLY the files that carry
-    * deletes, dropping their deleted rows, in one atomic validated commit
-    * (conflicts with concurrent merges are detected and retried by the
-    * caller like any maintenance op). Stale dv rows for the replaced
-    * paths stop matching immediately; [[vacuum]] reclaims them. Returns
-    * the number of files rewritten. */
+    * deletes, dropping their deleted rows ([[IceTable.rewriteGroups]],
+    * one file per group — a file whose every row is deleted is replaced
+    * by nothing), in one atomic validated commit (conflicts with
+    * concurrent merges are detected and retried by the caller like any
+    * maintenance op). Stale dv rows for the replaced paths stop matching
+    * immediately; [[vacuum]] reclaims them. Returns the number of files
+    * rewritten. */
   def materialize(main: IceTable): Int = {
     var attempts = 0
     while (attempts < 5) {
@@ -136,19 +137,15 @@ object DeleteVectors {
       val dv = dvTable(main)
       val dvSnap = dv.trySnapshot().getOrElse(return 0)
       if (dvSnap.aliveFiles.isEmpty) return 0
-      val deletes = dv.readFiles(dvSnap, dvSnap.aliveFiles)
-        .select("path", "row_index").distinct().localCheckpoint()
-      val affectedPaths = deletes.select("path").distinct()
+      val affectedPaths = dv.readFiles(dvSnap, dvSnap.aliveFiles)
+        .select("path").distinct()
         .collect().map(_.getString(0)).toSet // file-count scale, not rows
       val snap = main.snapshot()
       val targets = snap.aliveFiles.filter(m => affectedPaths(m.path))
       if (targets.isEmpty) return 0
-      val newFiles: Seq[FileMarker] = IceTable.onInsertPool(targets) { m =>
-        val kept = main.dropDeleted(
-          main.scanMarkers(snap.schema.toStructType, Seq(m)), lit(m.path),
-          Some(broadcast(deletes.where(col("path") === m.path)
-            .select(col("path").as("_dv_path"), col("row_index").as("_dv_row")))))
-        main.writeSingleFileFor(kept, main.partitionOf(m.path))
+      val (newFiles, _) = main.rewriteGroups(snap,
+        targets.map(m => main.partitionOf(m.path) -> Seq(m))) {
+        (_, kept) => main.resortedFile(kept)
       }
       try {
         // validatedRewriteCommit re-checks the dv stamp AND the sources

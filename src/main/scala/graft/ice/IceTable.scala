@@ -7,10 +7,12 @@ import org.apache.spark.sql.types.StructType
 import java.util.UUID
 import scala.collection.mutable
 
-/** What a merge did (reference: icedb/icedb.py:223-325 return tuple). */
+/** What a merge did (reference: icedb/icedb.py:223-325 return tuple).
+  * `newFileMarker` is None when every merged row was deleted: the sources
+  * are then replaced by nothing. */
 final case class MergeResult(
     newLog: String,
-    newFileMarker: FileMarker,
+    newFileMarker: Option[FileMarker],
     partition: String,
     mergedFileMarkers: Seq[FileMarker],
     meta: LogMetadata)
@@ -459,11 +461,16 @@ final class IceTable(
   }
 
   /** The one `_dv/_log` existence probe: whether this table has a
-    * deletion-vector side table. A failed probe reads as "no". */
+    * deletion-vector side table. Only a NOT-FOUND reads as "no"; any
+    * other IO failure propagates — read as "no", it would make [[read]]
+    * and every rewrite silently bring the deleted rows back. Spelled as
+    * `getFileStatus`, the call `FileSystem.exists` makes by default:
+    * `RawLocalFileSystem` overrides `exists` with a check that cannot
+    * fail. */
   private def hasDvTable: Boolean = {
     val probe = new Path(s"$root/_dv", "_log")
-    try probe.getFileSystem(hadoopConf).exists(probe)
-    catch { case _: Exception => false }
+    try { probe.getFileSystem(hadoopConf).getFileStatus(probe); true }
+    catch { case _: java.io.FileNotFoundException => false }
   }
 
   /** LEFT ANTI-join `df`, a scan of this table's files, against deleted
@@ -962,11 +969,12 @@ final class IceTable(
     noShuffle.insert(df.repartitionByRange(numFiles, clusterExpr))
   }
 
-  private def insertDefault(routed: DataFrame): (Seq[FileMarker], Schema) = {
+  private def insertDefault(routed: DataFrame,
+      shuffle: Boolean = cfg.shuffleOnInsert): (Seq[FileMarker], Schema) = {
     val schema = Schema.fromStructType(routed.drop(IceTable.RouteCol).schema)
     val sortCols = col(IceTable.RouteCol) +: cfg.sortOrder.map(col)
     val arranged =
-      if (cfg.shuffleOnInsert) routed.repartition(col(IceTable.RouteCol))
+      if (shuffle) routed.repartition(col(IceTable.RouteCol))
       else routed
     (writeDataFiles(arranged.sortWithinPartitions(sortCols: _*), None), schema)
   }
@@ -1036,7 +1044,7 @@ final class IceTable(
     // thread pool (icedb.py:205-215) — at 10³-10⁴ partitions a serial
     // driver loop of Spark jobs is the bottleneck. Leaf-only futures: each
     // submits one Spark job + a rename, and never blocks on this pool.
-    val results: Seq[(Schema, FileMarker)] = IceTable.onInsertPool(parts.toSeq) { p =>
+    val results: Seq[(Schema, Seq[FileMarker])] = IceTable.onInsertPool(parts.toSeq) { p =>
       val view = s"_rows_${UUID.randomUUID().toString.replace("-", "")}"
       // resolve the view through the DataFrame's OWN session: inside
       // foreachBatch the batch belongs to a per-micro-batch session
@@ -1047,14 +1055,14 @@ final class IceTable(
       try {
         val result = ss.sql(sql.replaceAll("\\b_rows\\b", view))
         val s = Schema.fromStructType(result.schema)
-        (s, writeSingleFile(result, p))
+        (s, writeDataFiles(oneFile(result, Nil), Some(p)))
       } finally ss.catalog.dropTempView(view)
     }
     // fold on the caller thread in sorted partition order, so a schema
     // conflict raises at the same partition the serial loop would have
     val schema = new Schema
     results.foreach { case (s, _) => schema.accumulate(s.columns, s.types) }
-    (results.map(_._2), schema)
+    (results.flatMap(_._2), schema)
   }
 
   /** The one data-file writer every engine write ends in: insert,
@@ -1224,7 +1232,7 @@ final class IceTable(
 
   /** Merge/optimize output: one file, re-sorted for a default merge under
     * `IceTableConfig.sortOnMerge`. */
-  private def mergeArrange(df: DataFrame): DataFrame = oneFile(df,
+  private def mergeArrange(partition: String, df: DataFrame): DataFrame = oneFile(df,
     if (cfg.sortOnMerge && cfg.customMergeSql.isEmpty) cfg.sortOrder.map(col)
     else Nil)
 
@@ -1392,11 +1400,10 @@ final class IceTable(
 
   /** The key-set rewrite behind [[upsert]] and [[deleteKeys]]: probe which
     * alive files of `snap` hold rows whose `keyCols` appear in `srcKeys`,
-    * then rewrite exactly those files without such rows, per file on the
-    * bounded pool. Deletion vectors apply to both: an already-deleted row
-    * is no match, and a rewrite re-positions survivors, so unapplied marks
-    * would resurrect their rows. A file emptied to zero rows is
-    * tombstoned with no replacement, never kept alive empty. Returns
+    * then rewrite exactly those files without such rows through
+    * [[rewriteGroups]], one file per group. Deletion vectors apply to
+    * both: an already-deleted row is no match, and a rewrite re-positions
+    * survivors, so unapplied marks would resurrect their rows. Returns
     * (targets, their rewrites, matched rows); the caller commits. */
   private def rewriteWithoutKeys(snap: IceSnapshot, srcKeys: DataFrame,
       keyCols: Seq[String]): (Seq[FileMarker], Seq[FileMarker], Long) = {
@@ -1412,13 +1419,9 @@ final class IceTable(
       .collect() // file-count scale: one row per AFFECTED file
     val affected = hits.map(_.getString(0)).toSet
     val targets = snap.aliveFiles.filter(m => affected(m.path))
-    val rewritten = IceTable.onInsertPool(targets) { m =>
-      val kept = dropDeleted(scanMarkers(schema, Seq(m)), lit(m.path), del)
-        .join(srcKeys, keyCols, "left_anti")
-      val out = writeSingleFileFor(kept, partitionOf(m.path))
-      if (out.rowCount.contains(0L)) { logio.delete(root, out.path); None }
-      else Some(out)
-    }.flatten
+    val (rewritten, _) = rewriteGroups(snap, targets.map(m => partitionOf(m.path) -> Seq(m))) {
+      (_, src) => resortedFile(src.join(srcKeys, keyCols, "left_anti"))
+    }
     (targets, rewritten, hits.map(_.getLong(1)).sum)
   }
 
@@ -1499,67 +1502,53 @@ final class IceTable(
     precheck.foreach(check => check(withVirtFromPath(dropDeleted(
       scanMarkers(schema, targets).withColumn("_p", relPathCol), col("_p"), del))
       .drop("_p")))
-    // per-file rewrites fan out on the bounded pool (leaf-only: one Spark
-    // job + a rename each), like rewritePartition — serial per-file jobs
-    // would make driver wall-clock linear in affected files. A rewrite
-    // that keeps ZERO rows (a delete emptied the file) tombstones the
-    // source WITHOUT a replacement — an empty file would survive alive
-    // forever, padding every later scan's file list (and, on MV tables,
-    // carrying the pre-narrowing union schema past a rebase).
-    val newFiles: Seq[FileMarker] = IceTable.onInsertPool(rewriteTargets) { m =>
-      val src = dropDeleted(scanMarkers(schema, Seq(m)), lit(m.path), del)
-      val part = partitionOf(m.path)
-      val out = writeSingleFileFor(
-        transform(withVirtFor(src, part)).drop(virtKeys: _*), part)
-      if (out.rowCount.contains(0L)) { logio.delete(root, out.path); None }
-      else Some(out)
-    }.flatten
+    // one-file groups through the rewrite writer, which drops an emptied
+    // output (on MV tables an empty file would also carry the
+    // pre-narrowing union schema past a rebase)
+    val (newFiles, _) = rewriteGroups(snap,
+        rewriteTargets.map(m => partitionOf(m.path) -> Seq(m))) { (part, src) =>
+      resortedFile(transform(withVirtFor(src, part)).drop(virtKeys: _*))
+    }
     validatedRewriteCommit(targets, newFiles, Seq(outSchema), dvStampAtRead)
     matched
   }
 
-  /** Single-file write into a partition with a fresh uuid name (the
-    * per-file building block [[DeleteVectors.materialize]] shares).
-    * Re-sorts by the table's sortOrder: the source file was clustered,
-    * and a mutation's join/filter may not preserve that — losing it would
+  /** The arrange step of a copy-on-write file rewrite (DML,
+    * [[DeleteVectors.materialize]]): all of `df` in one file, re-sorted by
+    * the table's sortOrder. The source file was clustered, and a
+    * mutation's join/filter may not preserve that — losing it would
     * silently widen row-group stats on exactly the rewritten files. */
-  private[ice] def writeSingleFileFor(df: DataFrame, partition: String): FileMarker =
-    writeSingleFile(df, partition,
-      cfg.sortOrder.filter(df.columns.contains).map(col))
+  private[ice] def resortedFile(df: DataFrame): DataFrame =
+    oneFile(df, cfg.sortOrder.filter(df.columns.contains).map(col))
 
-  /** Atomic full-content REPLACEMENT of the table with `newContent`
-    * (routed and sorted by this table's own config): the generalized form
-    * of [[repartitionTable]] used for rewrites whose change is the ROWS,
-    * not the partition scheme — e.g. deletion-vector vacuum. One write
-    * job + one validated merged-log commit. Returns files written.
+  /** Atomic full-content REPLACEMENT of the table with `newContent`,
+    * routed, shuffled on the route and sorted by this table's own config
+    * — behind [[repartitionTable]] (a handle with the new scheme) and
+    * deletion-vector vacuum (the dv table). One write job + one validated
+    * merged-log commit. Returns files written.
     *
     * @param sources the EXACT alive-marker set `newContent` was computed
     *   from; only these are tombstoned. A file committed concurrently
     *   (between the caller's read and this commit) stays alive alongside
     *   the rewrite instead of being silently dropped — the dv-vacuum race
     *   shape. None = tombstone the freshest snapshot's alive set (callers
-    *   whose `newContent` derives from state they re-read here). */
+    *   whose `newContent` derives from state they re-read here).
+    * @param dvStampAtRead the caller's [[dvStamp]] from before it read
+    *   `newContent` (default: captured at the call). */
   private[ice] def rewriteTable(
       newContent: DataFrame,
       sources: Option[Seq[FileMarker]] = None,
-      tsFloor: Long = 0L): Int = {
-    val dvStampAtRead = dvStamp()
+      tsFloor: Long = 0L,
+      dvStampAtRead: Option[String] = dvStamp()): Int = {
     val acc = sources.orElse(trySnapshot(Long.MaxValue).map(_.aliveFiles))
       .getOrElse(return 0)
     val routed = appendBucketRoute(
       newContent.withColumn(IceTable.RouteCol, cfg.partitionExpr))
-    val (written, _) = insertDefault(routed)
+    val (written, _) = insertDefault(routed, shuffle = true)
     val (_, _, stamped) = validatedRewriteCommit(acc, written,
       dvStampAtRead = dvStampAtRead, tsFloor = tsFloor)
     stamped.length
   }
-
-  /** One file in `partition` (fresh uuid name) holding all of `df`. */
-  private def writeSingleFile(
-      df: DataFrame, partition: String,
-      sortCols: Seq[Column] = Nil): FileMarker =
-    writeDataFiles(oneFile(df, sortCols), Some(partition)).headOption.getOrElse(
-      throw new java.io.IOException(s"no parquet output for partition $partition"))
 
   /** All of `df` in one output file, sorted AFTER the coalesce: sorting
     * the inputs per-partition and then coalescing would concatenate sorted
@@ -1600,9 +1589,12 @@ final class IceTable(
         val snap = trySnapshot(ts.getOrElse(coveringTs())).getOrElse(return None)
         return IceTable.planMerges(snap, maxFileSize, maxFileCount, asc)
           .headOption.map { case group @ (partition, sources) =>
-            val (newLog, meta, stamped) = rewriteGroups(snap, Seq(group),
-              dvStamp(), cfg.customMergeSql)(mergeArrange)
-            MergeResult(newLog, stamped.head, partition, sources, meta)
+            val dvStampAtRead = dvStamp()
+            val (written, schemas) =
+              rewriteGroups(snap, Seq(group), cfg.customMergeSql)(mergeArrange)
+            val (newLog, meta, stamped) =
+              validatedRewriteCommit(sources, written, schemas, dvStampAtRead)
+            MergeResult(newLog, stamped.headOption, partition, sources, meta)
           }
       } catch {
         case _: CommitConflictException =>
@@ -1614,65 +1606,32 @@ final class IceTable(
       s"merge lost $attempts consecutive commit races; giving up")
   }
 
-  /** Commit-time validation under the table's JVM-wide commit lock: every
+  /** The one commit of every file-replacing operation — merge / optimize
+    * / recluster, the CoW DML rewrites, partition rewrite, dv materialize
+    * and [[rewriteTable]]. Under the table's JVM-wide commit lock: every
     * `sources` path must still be ALIVE in a fresh fold (a concurrent
     * merge/rewrite/removal that tombstoned one means our output would
-    * resurrect or duplicate its rows), and each source's log linkage is
-    * re-resolved from the fresh fold (a concurrent cleanup may have
-    * consolidated the original source logs away). `body` runs while the
-    * lock is held, so same-JVM commits are linearizable; cross-process
-    * writers keep the reference's external-lock contract, now narrowed to
-    * the validate→append window instead of the whole operation.
+    * resurrect or duplicate its rows); the CURRENT source logs of the
+    * revalidated sources are folded (a concurrent cleanup may have
+    * consolidated the original ones away), carried markers are overlaid
+    * with the latest state, the source paths are tombstoned, and ONE
+    * merged log holding carried + new markers is appended. Same-JVM
+    * commits are linearizable; cross-process writers keep the reference's
+    * external-lock contract, narrowed to the validate→append window. On
+    * conflict the freshly written `newFiles` are deleted before
+    * rethrowing. Returns (new log path, metadata, commit-stamped new
+    * markers).
     *
-    * `body` also receives the fresh fold's path→marker map: any marker a
-    * commit carries forward from a source log MUST be overlaid with its
-    * current copy first — the source-log copy can predate a concurrent
-    * commit's tombstone on a DIFFERENT path in the same log, and
-    * re-listing the stale copy in a newer log would resurrect that file.
-    *
-    * The third argument is the COMMIT TIMESTAMP the body must stamp its
-    * append with: `max(now, max folded log ts + 1)`. The fold is ordered
-    * by filename timestamp, and same-millisecond commits get
-    * filename-bumped PAST the wall clock (IceLogIO.append) — a commit
-    * stamped at bare now() could sort BEFORE a bump-chained log it just
-    * overlaid, whose re-listed alive copies would then win last-writer-
-    * wins over the commit's tombstones.
-    */
-  private def withValidatedCommit[T](sources: Seq[FileMarker],
-      tsFloor: Long = 0L)(
-      body: (Seq[FileMarker], Map[String, FileMarker], Long,
-        Option[Map[String, Any]]) => T): T =
-    IceTable.withTableLock(root, hadoopConf) {
-      // Long.MaxValue, not now(): validation wants the absolute latest
-      // state. Same-millisecond commits get filename-bumped PAST the
-      // current clock reading (IceLogIO.append), and a time-filtered fold
-      // would miss exactly the commit we must not conflict with.
-      val cur = logio.readAtMaxTime(root, Long.MaxValue)
-      val byPath = cur.files.iterator.map(f => f.path -> f).toMap
-      val fresh = sources.map { m =>
-        byPath.get(m.path).filter(_.alive).getOrElse(
-          throw new CommitConflictException(
-            s"source file ${m.path} was tombstoned or removed by a concurrent commit"))
-      }
-      val maxLogTs = cur.logFiles.iterator
-        .map(p => IceLogIO.logFileInfo(p)._1).maxOption.getOrElse(0L)
-      // the body folds source logs BETWEEN fixing commitTs and appending —
-      // register the ts as in flight for that whole window so a concurrent
-      // settled-bound consumer cannot serve a window past it and lose the
-      // rewrite's change events (IceLogIO registry)
-      val commitTs = IceLogIO.registerCommitFloor(
-        root, math.max(math.max(now(), maxLogTs + 1), tsFloor), logRel)
-      try body(fresh, byPath, commitTs, cur.tableConfig)
-      finally IceLogIO.endCommit(root, commitTs, logRel)
-    }
-
-  /** The shared validated log-rewrite commit used by merge / optimize /
-    * recluster / repartition: under the commit lock, fold the CURRENT
-    * source logs of the revalidated `sources`, overlay carried markers
-    * with the latest state, tombstone the source paths, and append ONE
-    * merged log holding carried + new markers. On conflict the freshly
-    * written `newFiles` are deleted before rethrowing. Returns
-    * (new log path, metadata, commit-stamped new markers).
+    * Carried markers MUST be overlaid with their current copy: the
+    * source-log copy can predate a concurrent commit's tombstone on a
+    * DIFFERENT path in the same log, and re-listing the stale copy in a
+    * newer log would resurrect that file. The append is stamped
+    * `max(now, max folded log ts + 1, tsFloor)`: the fold is ordered by
+    * filename timestamp, and same-millisecond commits get filename-bumped
+    * PAST the wall clock (IceLogIO.append) — a commit stamped at bare
+    * now() could sort BEFORE a bump-chained log it just overlaid, whose
+    * re-listed alive copies would then win last-writer-wins over the
+    * commit's tombstones.
     *
     * @param dvStampAtRead the [[dvStamp]] the caller captured BEFORE
     *   reading any data. Re-computed here under the commit lock (the same
@@ -1690,53 +1649,79 @@ final class IceTable(
       dvStampAtRead: Option[String] = None,
       tsFloor: Long = 0L)
       : (String, LogMetadata, Seq[FileMarker]) =
-    try withValidatedCommit(sources, tsFloor) { (fresh, curByPath, commitTs, curCfg) =>
+    try IceTable.withTableLock(root, hadoopConf) {
+      // Long.MaxValue, not now(): validation wants the absolute latest
+      // state. Same-millisecond commits get filename-bumped PAST the
+      // current clock reading (IceLogIO.append), and a time-filtered fold
+      // would miss exactly the commit we must not conflict with.
+      val cur = logio.readAtMaxTime(root, Long.MaxValue)
+      val curByPath = cur.files.iterator.map(f => f.path -> f).toMap
+      val fresh = sources.map { m =>
+        curByPath.get(m.path).filter(_.alive).getOrElse(
+          throw new CommitConflictException(
+            s"source file ${m.path} was tombstoned or removed by a concurrent commit"))
+      }
       if (dvStamp() != dvStampAtRead)
         throw new CommitConflictException(
           "deletion-vector state changed between this rewrite's data read " +
             "and its commit; retry from a fresh snapshot")
-      val mergedLogFiles = fresh.flatMap(_.virSourceLogFile).distinct.sorted
-      val ((mSchema, mMarkers0, mTombstones), mCommits) =
-        logio.readLogForwardWithCommits(root, mergedLogFiles)
-      val mMarkers = mMarkers0.map(m => curByPath.getOrElse(m.path, m))
-      // a custom merge SQL may reshape columns (seed an aggregate state);
-      // reads are schema-driven, so the output schema accumulates add-only
-      accumulateSchemas.foreach(s => mSchema.accumulate(s.columns, s.types))
-      val accPaths = sources.map(_.path).toSet
-      val updated = mMarkers.map { m =>
-        // copy, not reconstruct: carried-forward markers keep their stats
-        m.copy(
-          tombstone = if (accPaths(m.path)) Some(commitTs) else m.tombstone,
-          virSourceLogFile = None)
-      }
-      val stamped = newFiles.map(_.copy(createdMs = commitTs))
-      val newTombstones = mergedLogFiles.map(LogTombstone(_, commitTs))
-      val (newLog, meta) = logio.append(
-        root, 1, mSchema,
-        updated ++ stamped,
-        mTombstones ++ newTombstones,
-        merged = true,
-        timestamp = Some(commitTs),
-        streamCommits = mCommits, // exactly-once records outlive the rewrite
-        // orElse: a rewrite's log may outlive (and its cleanup delete) the
-        // log that carried the config — a bare handle must not drop it
-        tableCfg = persistedCfg.orElse(curCfg))
-      (newLog, meta, stamped)
+      val maxLogTs = cur.logFiles.iterator
+        .map(p => IceLogIO.logFileInfo(p)._1).maxOption.getOrElse(0L)
+      // the source logs fold BETWEEN fixing commitTs and appending —
+      // register the ts as in flight for that whole window so a concurrent
+      // settled-bound consumer cannot serve a window past it and lose the
+      // rewrite's change events (IceLogIO registry)
+      val commitTs = IceLogIO.registerCommitFloor(
+        root, math.max(math.max(now(), maxLogTs + 1), tsFloor), logRel)
+      try {
+        val mergedLogFiles = fresh.flatMap(_.virSourceLogFile).distinct.sorted
+        val ((mSchema, mMarkers0, mTombstones), mCommits) =
+          logio.readLogForwardWithCommits(root, mergedLogFiles)
+        val mMarkers = mMarkers0.map(m => curByPath.getOrElse(m.path, m))
+        // a custom merge SQL may reshape columns (seed an aggregate state);
+        // reads are schema-driven, so the output schema accumulates add-only
+        accumulateSchemas.foreach(s => mSchema.accumulate(s.columns, s.types))
+        val accPaths = sources.map(_.path).toSet
+        val updated = mMarkers.map { m =>
+          // copy, not reconstruct: carried-forward markers keep their stats
+          m.copy(
+            tombstone = if (accPaths(m.path)) Some(commitTs) else m.tombstone,
+            virSourceLogFile = None)
+        }
+        val stamped = newFiles.map(_.copy(createdMs = commitTs))
+        val newTombstones = mergedLogFiles.map(LogTombstone(_, commitTs))
+        val (newLog, meta) = logio.append(
+          root, 1, mSchema,
+          updated ++ stamped,
+          mTombstones ++ newTombstones,
+          merged = true,
+          timestamp = Some(commitTs),
+          streamCommits = mCommits, // exactly-once records outlive the rewrite
+          // orElse: a rewrite's log may outlive (and its cleanup delete) the
+          // log that carried the config — a bare handle must not drop it
+          tableCfg = persistedCfg.orElse(cur.tableConfig))
+        (newLog, meta, stamped)
+      } finally IceLogIO.endCommit(root, commitTs, logRel)
     } catch {
       case e: CommitConflictException =>
         newFiles.foreach(m => logio.delete(root, m.path))
         throw e
     }
 
-  /** The one rewrite executor behind merge / optimize / recluster: every
-    * (partition, sources) group reads its sources under `snap` with
-    * deletes applied, runs `mergeSql` (if any) over them as the
-    * `source_files` view, and writes `arrange` of the result into its
-    * partition; the groups run concurrently on the insert pool (disjoint
-    * partitions touch disjoint files). All outputs then commit in ONE
-    * [[validatedRewriteCommit]] (the log rewrite of icedb/icedb.py:290-322,
-    * one append for every group); on conflict the outputs are deleted and
-    * the [[CommitConflictException]] propagates.
+  /** The one writer of replacement files, behind every operation that
+    * replaces alive files: merge / optimize / recluster, the CoW DML
+    * rewrites, [[rewritePartitionWith]] and [[DeleteVectors.materialize]].
+    * Every (partition, sources) group reads its sources under `snap` with
+    * deletes applied (ONE [[dvPositions]] for the whole call), runs
+    * `mergeSql` (if any) over them as the `source_files` view, and writes
+    * `arrange(partition, result)` into its partition; the groups run
+    * concurrently on the insert pool (disjoint groups touch disjoint
+    * files). An output holding zero rows is deleted at once: a group whose
+    * every row is gone is replaced by nothing, never by an empty file
+    * that would stay alive padding every later scan. Returns the written
+    * markers and each group's `mergeSql` output schema; the caller
+    * commits them in ONE [[validatedRewriteCommit]] (the log rewrite of
+    * icedb/icedb.py:290-322), which deletes them on conflict.
     *
     * The view name is made unique so concurrent merges of different
     * tables in one session never race, and it is dropped once the write
@@ -1744,26 +1729,29 @@ final class IceTable(
     * the source-log schema verbatim, icedb.py:291-293): a custom merge SQL
     * may *reshape* columns; its output schema accumulates add-only (type
     * conflicts still throw). */
-  private def rewriteGroups(
+  private[ice] def rewriteGroups(
       snap: IceSnapshot,
       groups: Seq[(String, Seq[FileMarker])],
-      dvStampAtRead: Option[String],
       mergeSql: Option[String] = None)(
-      arrange: DataFrame => DataFrame): (String, LogMetadata, Seq[FileMarker]) = {
+      arrange: (String, DataFrame) => DataFrame): (Seq[FileMarker], Seq[Schema]) = {
+    if (groups.isEmpty) return (Nil, Nil)
+    val schema = snap.schema.toStructType
+    val del = dvPositions(groups.flatMap(_._2.map(_.path)), Long.MaxValue)
     val written = IceTable.onInsertPool(groups) { case (partition, sources) =>
-      val src = readFilesApplyingDeletes(snap, sources)
+      val src = dropDeleted(scanMarkers(schema, sources), relPathCol, del)
       val view = s"source_files_${UUID.randomUUID().toString.replace("-", "")}"
       try {
         val out = mergeSql.fold(src) { q =>
           src.createOrReplaceTempView(view)
           spark.sql(q.replaceAll("\\bsource_files\\b", view))
         }
-        (writeDataFiles(arrange(out), Some(partition)),
+        (writeDataFiles(arrange(partition, out), Some(partition)),
           mergeSql.map(_ => Schema.fromStructType(out.schema)))
       } finally if (mergeSql.isDefined) spark.catalog.dropTempView(view)
     }
-    validatedRewriteCommit(groups.flatMap(_._2), written.flatMap(_._1),
-      written.flatMap(_._2), dvStampAtRead)
+    val (empty, kept) = written.flatMap(_._1).partition(_.rowCount.contains(0L))
+    empty.foreach(m => logio.delete(root, m.path))
+    (kept, written.flatMap(_._2))
   }
 
   /** Run [[merge]] until no partition has anything left to merge (the
@@ -1802,7 +1790,10 @@ final class IceTable(
       // a lost commit race just re-plans the round from a fresh snapshot
       // (bounded: each loss burns one of `conflicts`)
       if (more) try {
-        rewriteGroups(snap.get, groups, dvStamp(), cfg.customMergeSql)(mergeArrange)
+        val dvStampAtRead = dvStamp()
+        val (written, schemas) =
+          rewriteGroups(snap.get, groups, cfg.customMergeSql)(mergeArrange)
+        validatedRewriteCommit(groups.flatMap(_._2), written, schemas, dvStampAtRead)
         total += groups.length
       } catch {
         case e: CommitConflictException =>
@@ -1846,10 +1837,12 @@ final class IceTable(
       .sortBy(_._1)
     // every alive file of a partition is one group: the optimize executor
     // with a clustering arrange step instead of the merge one
-    if (byPart.nonEmpty) rewriteGroups(snap, byPart, dvStampAtRead) { src =>
+    val (written, _) = rewriteGroups(snap, byPart) { (_, src) =>
       if (filesPer == 1) oneFile(src, Seq(clusterExpr))
       else src.repartitionByRange(filesPer, clusterExpr).sortWithinPartitions(clusterExpr)
     }
+    if (byPart.nonEmpty)
+      validatedRewriteCommit(byPart.flatMap(_._2), written, Seq.empty, dvStampAtRead)
     byPart.length
   }
 
@@ -1859,7 +1852,8 @@ final class IceTable(
     * (the partition scheme is frozen at `part_func` — icedb/icedb.py:22);
     * this is the lakehouse-native operation for it.
     *
-    * Shape: one snapshot → one Spark job (the same shuffle-on-partition +
+    * Shape: one snapshot → [[rewriteTable]] on a handle carrying the new
+    * scheme: one Spark job (the same shuffle-on-partition +
     * sortWithinPartitions + partitionBy write as [[insert]]'s default
     * path, under `newPartitionExpr`/`newSortOrder`) → ONE merged-log
     * append that tombstones every pre-existing alive file, carries
@@ -1885,36 +1879,22 @@ final class IceTable(
     val dvStampAtRead = dvStamp() // BEFORE the dv-applying read
     val snap = trySnapshot(coveringTs()).getOrElse(return 0)
     if (snap.aliveFiles.isEmpty) return 0
-    val src = readFilesApplyingDeletes(snap, snap.aliveFiles)
-    // write through the standard insert machinery (clone with the new
-    // routing/sort config) but commit via the merge-style log rewrite
-    val writerTable = new IceTable(spark, root,
-      cfg.copy(partitionExpr = newPartitionExpr, sortOrder = newSortOrder,
-        customInsertSql = None, partitionFunc = None, formatRow = None,
-        preservePartition = false, shuffleOnInsert = true), clock, logRel)
-    val routed = writerTable.appendBucketRoute(
-      src.withColumn(IceTable.RouteCol, newPartitionExpr))
-    val (written, _) = writerTable.insertDefault(routed)
-
-    val allAcc = snap.aliveFiles
-    // commit through a handle carrying the NEW partition/sort config (all
-    // other knobs kept): the rewrite's log metadata is last-writer-wins,
-    // so committing through `this` would re-stamp the OLD partition
-    // expression as authoritative — a later IceTable.open / SQL INSERT
-    // would route new rows under the pre-repartition scheme while the
-    // data sits under the new one. (The writer handle is NOT used here:
-    // it deliberately clears customInsertSql/formatRow for the data job,
-    // and those must stay recorded for future inserts.)
-    // partitionFunc cleared: the new DECLARATIVE expression supersedes any
-    // closure (or unpersistable-expr poison) — leaving the flag standing
-    // would poison every reopened handle's inserts even though the table
-    // now has a perfectly persistable scheme
-    val commitTable = new IceTable(spark, root,
+    // write and commit through a handle carrying the NEW partition/sort
+    // config (all other knobs kept): the rewrite's log metadata is
+    // last-writer-wins, so committing through `this` would re-stamp the
+    // OLD partition expression as authoritative — a later IceTable.open /
+    // SQL INSERT would route new rows under the pre-repartition scheme
+    // while the data sits under the new one. customInsertSql/formatRow
+    // stay recorded for future inserts; the rewrite's write never runs
+    // them. partitionFunc cleared: the new DECLARATIVE expression
+    // supersedes any closure (or unpersistable-expr poison) — leaving the
+    // flag standing would poison every reopened handle's inserts even
+    // though the table now has a perfectly persistable scheme
+    new IceTable(spark, root,
       cfg.copy(partitionExpr = newPartitionExpr, sortOrder = newSortOrder,
         partitionFunc = None), clock, logRel)
-    val (_, _, stamped) = commitTable.validatedRewriteCommit(allAcc, written,
-      dvStampAtRead = dvStampAtRead)
-    stamped.length
+      .rewriteTable(readFilesApplyingDeletes(snap, snap.aliveFiles),
+        Some(snap.aliveFiles), dvStampAtRead = dvStampAtRead)
   }
 
   // ----------------------------------------------------- maintenance (A15-17)
@@ -2356,7 +2336,7 @@ final class IceTable(
     // window, and filename-bumped same-ms commits stay visible), so it
     // serializes cleanly against merge/rewrite commits. The commit stamp
     // is forced PAST every folded log for the same reason as
-    // withValidatedCommit: a bump-chained insert log outsorting this
+    // validatedRewriteCommit: a bump-chained insert log outsorting this
     // append would resurrect the removed partition.
     val snap = snapshot(Long.MaxValue)
     val removeTime = math.max(now(), snap.logFiles.iterator
@@ -2538,8 +2518,10 @@ final class IceTable(
   /** A17 filtered partition rewrite (GDPR purge, retro-dedup): every alive
     * part in the target partition is piped through `filterSql` (source view
     * `_rows`) into a new file; old parts get tombstones
-    * (icedb/icedb.py:503-589). The filter must not create new columns — the
-    * current schema is carried to the new log (icedb.py:507-509).
+    * (icedb/icedb.py:503-589), in the same validated merged-log commit as
+    * a merge, and a part the filter empties is replaced by nothing. The
+    * filter must not create new columns — the parts' logged schema is
+    * carried to the new log (icedb.py:507-509).
     */
   def rewritePartition(
       targetPartition: String,
@@ -2561,51 +2543,18 @@ final class IceTable(
       transform: DataFrame => DataFrame)
       : (Option[String], Option[LogMetadata], Seq[String]) = {
     val dvStampAtRead = dvStamp() // BEFORE the dv-applying reads
-    val runTime = coveringTs()
-    val snap = snapshot(runTime)
-
+    val snap = snapshot(coveringTs())
     val targets = snap.aliveFiles.filter(f => partitionOf(f.path) == targetPartition)
     if (targets.isEmpty) return (None, None, Seq.empty)
-
-    // per-file rewrites run concurrently on the bounded pool (leaf-only:
-    // one Spark job + a rename each) — the reference's serial per-file copy
-    // (icedb.py:540-567) is a driver bottleneck at high file counts
-    val newFiles: Seq[FileMarker] = IceTable.onInsertPool(targets) { old =>
-      writeSingleFile(transform(readFilesApplyingDeletes(snap, Seq(old))), targetPartition)
+    // one-file groups, rewritten concurrently — the reference's serial
+    // per-file copy (icedb.py:540-567) is a driver bottleneck at high
+    // file counts
+    val (newFiles, _) = rewriteGroups(snap, targets.map(m => targetPartition -> Seq(m))) {
+      (_, df) => oneFile(transform(df), Nil)
     }
-
-    val rewrittenPaths = targets.map(_.path).toSet
-    try withValidatedCommit(targets) { (freshTargets, curByPath, commitTime, _) =>
-      // same dv-staleness gate as validatedRewriteCommit: marks committed
-      // after our read would point at paths this commit tombstones
-      if (dvStamp() != dvStampAtRead)
-        throw new CommitConflictException(
-          "deletion-vector state changed between this rewrite's data read " +
-            "and its commit; retry from a fresh snapshot")
-      val updated = snap.files.map { m0 =>
-        // current copy wins over the snapshot's (see withValidatedCommit),
-        // and carried-forward markers keep their stats
-        val m = curByPath.getOrElse(m0.path, m0)
-        m.copy(
-          tombstone = if (rewrittenPaths(m.path)) Some(commitTime) else m.tombstone,
-          virSourceLogFile = None)
-      }
-      val newTombstones = freshTargets.flatMap(_.virSourceLogFile).distinct
-        .map(LogTombstone(_, commitTime))
-      val (newLog, meta) = logio.append(
-        root, 1, snap.schema,
-        updated ++ newFiles,
-        snap.tombstones ++ newTombstones,
-        merged = true,
-        timestamp = Some(commitTime),
-        streamCommits = snap.streamCommits, // full-fold rewrite carries all
-        tableCfg = persistedCfg.orElse(snap.tableConfig))
-      (Some(newLog), Some(meta), targets.map(_.path))
-    } catch {
-      case e: CommitConflictException =>
-        newFiles.foreach(m => logio.delete(root, m.path))
-        throw e
-    }
+    val (newLog, meta, _) =
+      validatedRewriteCommit(targets, newFiles, Seq.empty, dvStampAtRead)
+    (Some(newLog), Some(meta), targets.map(_.path))
   }
 }
 

@@ -77,6 +77,31 @@ class ConcurrentCommitSpec extends SparkSpec {
     r.foreach(res => assert(res.mergedFileMarkers.forall(_.alive)))
   }
 
+  test("rewritePartitionWith racing optimize + cleanup re-lists no cleaned file") {
+    val t = mkTable("rewrite_vs_cleanup")
+    t.insert(batch(0, 40).where($"id" % 4 === 0)) // p=0: one file
+    (0 until 3).foreach(i => // p=1: three files, the only mergeable partition
+      t.insert(batch(i * 40, i * 40 + 40).where($"id" % 4 === 1)))
+    Thread.sleep(2)
+    val first = new java.util.concurrent.atomic.AtomicBoolean(true)
+    t.rewritePartitionWith("p=0") { df =>
+      // between the rewrite's snapshot and its commit: p=1 is merged and
+      // its three source files are deleted from disk
+      if (first.getAndSet(false)) {
+        assert(t.optimize(maxFileSize = 1_000_000_000L, maxFileCount = 100) == 1)
+        Thread.sleep(2)
+        t.tombstoneCleanup(0L)
+      }
+      df.where($"id" =!= 0)
+    }
+    val fsys = t.logio.fs(t.root)
+    val missing = t.snapshot().aliveFiles
+      .filterNot(m => fsys.exists(new org.apache.hadoop.fs.Path(t.root, m.path)))
+    assert(missing.isEmpty, s"alive markers without a file: ${missing.map(_.path)}")
+    val expected = (0L until 120L).filter(i => (i % 4 == 0 && i != 0 && i < 40) || i % 4 == 1)
+    assert(t.read().select("id").as[Long].collect().sorted.toSeq == expected)
+  }
+
   test("removePartitions racing merge never resurrects removed rows") {
     (0 until 3).foreach { trial =>
       val t = mkTable(s"race_remove_$trial")

@@ -116,4 +116,46 @@ class DeleteVectorsSpec extends SparkSpec {
     assert(dv.read().count() == 20) // dedup merge SQL collapsed them
     assert(DeleteVectors.read(t).count() == 180)
   }
+
+  private def twoPartTable(name: String): IceTable =
+    new IceTable(spark, tmpDir(name), IceTableConfig(
+      partitionExpr = concat(lit("p="), (col("id") % 2).cast("string")),
+      sortOrder = Seq("id")))
+
+  test("materialize replaces a file whose every row is deleted with nothing") {
+    val t = twoPartTable("dv_mat_all")
+    t.insert(batch(0, 100)); t.insert(batch(100, 200)) // 2 files per insert
+    assert(DeleteVectors.deleteWhere(t, col("id") < 100) == 100)
+    assert(DeleteVectors.materialize(t) == 2)
+    val alive = t.snapshot().aliveFiles
+    assert(alive.length == 2, s"alive: ${alive.map(_.path)}")
+    assert(!alive.exists(_.rowCount.contains(0L)), "a zero-row file stayed alive")
+    assert(t.read().count() == 100)
+  }
+
+  test("optimize replaces a partition whose every row is deleted with nothing") {
+    val t = twoPartTable("dv_opt_all")
+    t.insert(batch(0, 100)); t.insert(batch(100, 200))
+    assert(DeleteVectors.deleteWhere(t, col("id") % 2 === 0) == 100) // all of p=0
+    assert(t.optimize(maxFileSize = 1_000_000_000L, maxFileCount = 100) == 2)
+    val alive = t.snapshot().aliveFiles
+    assert(alive.map(m => t.partitionOf(m.path)) == Seq("p=1"),
+      s"alive: ${alive.map(m => m.path -> m.rowCount)}")
+    assert(t.read().count() == 100)
+  }
+
+  test("a failing dv probe propagates instead of resurrecting deleted rows") {
+    spark.sparkContext.hadoopConfiguration.set("fs.flakydv.impl",
+      classOf[FlakyDvFileSystem].getName)
+    val t = new IceTable(spark, s"flakydv:${tmpDir("dv_flaky_probe")}",
+      IceTableConfig(partitionExpr = lit("all"), sortOrder = Seq("id")))
+    t.insert(batch(0, 100))
+    assert(DeleteVectors.deleteWhere(t, col("id") < 10) == 10)
+    FlakyDvFileSystem.armStatusFailure()
+    try {
+      val e = intercept[Exception](t.read().collect())
+      assert(e.isInstanceOf[java.io.IOException], s"unexpected: $e")
+    } finally FlakyDvFileSystem.disarm()
+    assert(t.read().count() == 90) // the blip gone, the marks apply again
+  }
 }

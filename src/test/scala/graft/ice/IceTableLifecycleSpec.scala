@@ -170,6 +170,21 @@ class IceTableLifecycleSpec extends SparkSpec {
     assert(countsByUser(table.read()) == Map("a" -> (aAll / 2)))
   }
 
+  test("rewritePartition replaces a file its filter empties with nothing") {
+    val t = new IceTable(spark, tmpDir("rewrite_empty"), IceTableConfig(
+      partitionExpr = lit("p=0"), sortOrder = Seq("id")))
+    t.insert(Seq((1L, "keep"), (2L, "keep")).toDF("id", "v"))
+    t.insert(Seq((3L, "drop")).toDF("id", "v"))
+    val (_, _, rewritten) = t.rewritePartition("p=0", "select * from _rows where v = 'keep'")
+    assert(rewritten.length == 2)
+    val alive = t.snapshot().aliveFiles
+    assert(!alive.exists(_.rowCount.contains(0L)),
+      s"a zero-row file stayed alive: ${alive.map(m => m.path -> m.rowCount)}")
+    assert(alive.length == 1)
+    assert(t.read().orderBy("id").as[(Long, String)].collect().toSeq ==
+      Seq((1L, "keep"), (2L, "keep")))
+  }
+
   test("time travel reads the state strictly before a timestamp") {
     val table = newTable()
     table.insert(exampleEvents)
